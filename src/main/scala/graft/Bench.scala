@@ -31,31 +31,26 @@ import org.apache.spark.sql.SparkSession
   * Failures are never silent: a query that throws is recorded in the
   * `failed` list of the emitted JSON, and passes with fewer failures are
   * preferred over faster ones when selecting the best pass.
+  *
+  * Solo plan tuning runs this same main on a subset, uncontended:
+  * `SPARK_GRAFT_BENCH_ONLY=<q>[,q…] SPARK_GRAFT_BENCH_PAR=1
+  * scripts/run_main.sh graft.Bench` (per-query stderr lines plus the
+  * JSON line; the full-suite `bench_full*.json` files are left alone).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // par=5 is the measured sweet spot on local[32] with the current mix
     // (four heavy shingle queries lead the LPT order; a fifth slot keeps
     // the small-query tail flowing) — still below the GC/scheduler
     // contention cliff seen at 6-8 concurrent heavy queries on an 8g heap
     val par = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAR", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.init(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-bench")
 
     // Storage-layout normalization + cache warm (unmeasured): see
-    // core.Layout.benchLayout — shared with SoloBench so solo plan
-    // tuning measures the same storage environment as the graded bench.
-    val benchDir = graft.core.Layout.benchLayout(spark, sfDir, cpus.toInt)
+    // core.Layout.benchLayout.
+    val benchDir = graft.core.Layout.benchLayout(spark, sfDir,
+      graft.core.Graft.defaultCpus.toInt)
 
     // Block-storage watermark: everything persisted by benchLayout (the
     // table cache) is baseline; RDDs persisted DURING query passes are

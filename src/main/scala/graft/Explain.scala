@@ -1,31 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Diagnostic main: print the formatted physical plan of named manifest
-  * queries (all of them with no args) — the plan-shape review loop
-  * (`PushedFilters`, `ReadSchema`, broadcast vs shuffle, WholeStageCodegen
-  * spans) without editing code.
+  * queries (all of them with no names) without executing them — the
+  * plan-shape review loop (`PushedFilters`, `ReadSchema`, broadcast vs
+  * shuffle, WholeStageCodegen spans) without editing code. Names may be
+  * separated by spaces, commas or both.
   *
-  * Usage: scripts/run_main.sh graft.Explain [sfDir] [query ...]
+  * Usage: scripts/run_main.sh graft.Explain [sfDir] [query[,query…] …]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val (dir, names) = args.toSeq match {
-      case d +: rest if d.startsWith("/") =>
-        (d, if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted)
+    val (dir, rest) = args.toSeq match {
+      case d +: rest if d.startsWith("/") => (d, rest)
       case rest =>
         ("/root/testdata/sf0.001",
-          if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted)
+          rest)
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.core.Graft.init(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val named = rest.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    val names =
+      if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
+    val spark = graft.core.Graft.session("graft-explain")
     names.foreach { n =>
       println(s"\n===================== $n =====================")
       println(SparkEntry.queries(n)(spark, dir)

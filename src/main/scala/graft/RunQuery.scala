@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-iteration utility: execute one or more declared queries and print
-  * row count + wall time — the companion to [[ExplainQuery]] for checking
+  * row count + wall time — the companion to [[Explain]] for checking
   * intermediate-result volumes while tuning a plan.
   *
   * Usage: scripts/run_main.sh graft.RunQuery <sf_dir> <query>[,query…]
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object RunQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunQuery <sf_dir> <q1>[,q2…]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Graft.init(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Graft.session("graft-runquery")
     args(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val t0 = System.nanoTime()
       val n = SparkEntry.queries(name)(spark, args(0)).count()

@@ -62,14 +62,7 @@ object Verify {
     // on one query without the 100-query wall; the driver passes 2 args)
     val only = args.lift(2).map(_.split(',').toSet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Graft.session("graft-verify")
     dump(spark, sfDir, outDir,
       SparkEntry.queries.toSeq.filter(q => keep(q._1)))
     val json = SparkEntry.oracleSql

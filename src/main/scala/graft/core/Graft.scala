@@ -12,12 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `local[N]` width and shuffle partitions of every graft session:
+    * SPARK_GRAFT_CPUS, else every core the JVM sees.
+    */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
+  /** The one session builder of every main (Bench, Verify, RunQuery,
+    * Explain) and of the benchmark harness, so they all run one config.
+    */
   def session(appName: String = "graft"): SparkSession = {
     val cpus = defaultCpus
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
@@ -30,8 +36,8 @@ object Graft {
     init(spark)
   }
 
-  /** Apply engine settings + function registry to an externally-built session
-    * (the driver's Verify/Bench sessions). Idempotent.
+  /** Apply engine settings + function registry to a session built
+    * elsewhere (tests, notebooks). Idempotent.
     */
   def init(spark: SparkSession): SparkSession = {
     // events.ts may be parquet TIMESTAMP(NANOS) depending on harness

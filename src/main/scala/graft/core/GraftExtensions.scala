@@ -2,30 +2,20 @@ package graft.core
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProduct, FhirPathExpr}
+import graft.functions.compat
 
-/** SparkSessionExtensions entry point: registers the engine's custom
-  * expressions at session build time, so deployments that construct their
-  * own session get the SQL surface with
-  * `.config("spark.sql.extensions", "graft.core.GraftExtensions")` —
-  * no imperative init call required. `Graft.init` remains the programmatic
-  * route (and additionally registers the compat-name rewrites).
+/** SparkSessionExtensions entry point: registers the engine's SQL surface
+  * at session build time, so deployments that construct their own session
+  * get it with `.config("spark.sql.extensions", "graft.core.GraftExtensions")`
+  * — no imperative init call required. `Graft.init` is the programmatic
+  * route; both register the names of `compat.sqlFunctions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("get_fhirpath"),
-      new ExpressionInfo(classOf[FhirPathExpr].getName, "get_fhirpath"),
-      (exprs: Seq[Expression]) => FhirPathExpr(exprs(0), exprs(1), one = false)))
-    e.injectFunction((
-      FunctionIdentifier("get_fhirpath_one"),
-      new ExpressionInfo(classOf[FhirPathExpr].getName, "get_fhirpath_one"),
-      (exprs: Seq[Expression]) => FhirPathExpr(exprs(0), exprs(1), one = true)))
-    e.injectFunction((
-      FunctionIdentifier("dot_product"),
-      new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    compat.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(compat.getClass.getName, name), build))
+    }
 }

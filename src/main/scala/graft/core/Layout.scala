@@ -40,8 +40,9 @@ object Layout {
     spark.read.parquet(path)
 
   /** Re-lay the driver fixture into a benchmark-fair layout and warm the
-    * cache — ONE definition shared by Bench and SoloBench so solo plan
-    * tuning measures the same storage environment the graded bench does.
+    * cache — Bench's, so solo plan tuning (Bench at
+    * SPARK_GRAFT_BENCH_PAR=1) measures the storage environment the graded
+    * suite does.
     *
     * The fixtures ship each table as ONE parquet row group, and a row
     * group is Spark's minimum split — so every scan-rooted pure-map query

@@ -18,12 +18,13 @@ import org.apache.spark.sql.types._
   * sum. The fused loop does m array lookups and adds, in the identical
   * left-fold order (float addition order preserved bit-for-bit).
   *
-  * Null contracts mirrored exactly (property-gated in `AdcScoreSpec`):
+  * Null contracts mirrored exactly (property-gated in `VectorFusionSpec`):
   * NULL codes or NULL lut → NULL; mismatched lengths → NULL (zip_with
   * pads with NULLs, and one NULL lookup nulls the running sum); a NULL
   * code, NULL sub-table or NULL table entry → NULL. An out-of-range
   * code throws, as ANSI element_at does (never reachable from pqEncode,
-  * whose codes index the same codebook the LUT is built from).
+  * whose codes index the same codebook the LUT is built from) — negative
+  * codes too, where element_at would count from the end.
   */
 case class AdcScoreExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -57,14 +58,15 @@ case class AdcScoreExpr(left: Expression, right: Expression)
     var j = 0
     while (j < m) {
       if (codes.isNullAt(j) || lut.isNullAt(j)) return null
-      val c =
-        (if (intCodes) codes.getInt(j).toLong else codes.getLong(j)).toInt
+      // range-check the full Long: truncating first would alias a code
+      // >= 2^31 onto a valid index
+      val c = if (intCodes) codes.getInt(j).toLong else codes.getLong(j)
       val larr = lut.getArray(j)
       if (c < 0 || c >= larr.numElements())
         throw new ArrayIndexOutOfBoundsException(
           s"adc_score: code $c out of range [0, ${larr.numElements()})")
-      if (larr.isNullAt(c)) return null
-      acc += larr.getDouble(c)
+      if (larr.isNullAt(c.toInt)) return null
+      acc += larr.getDouble(c.toInt)
       j += 1
     }
     acc

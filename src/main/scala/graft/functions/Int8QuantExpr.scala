@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * — three interpreted HigherOrderFunction passes per vector. The fused
   * loop computes maxabs and the codes in two plain passes.
   *
-  * Exact-parity notes (property-gated in `Int8QuantSpec`):
+  * Exact-parity notes (property-gated in `VectorFusionSpec`):
   *  - round(x, 0) replicates Spark's Round on doubles: NaN/Infinity pass
   *    through, else BigDecimal.valueOf (SHORTEST-DECIMAL representation)
   *    with HALF_UP (= half away from zero for both signs).

@@ -3,6 +3,7 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ExprBridge
 
@@ -126,10 +127,13 @@ object compat {
   // as the Column API above, so SQL callers get identical (codegen'd) plans.
   // -------------------------------------------------------------------------
 
-  def registerAll(spark: SparkSession): Unit = {
+  /** Every SQL name the engine adds, with its builder. Both registration
+    * routes iterate this one table: [[registerAll]] (`Graft.init`) and
+    * `graft.core.GraftExtensions` (`spark.sql.extensions`).
+    */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{IntegerType, StringType}
-    val reg = spark.sessionState.functionRegistry
+    import org.apache.spark.sql.types.IntegerType
 
     def lit2str(e: Expression): String = e match {
       case Literal(v, _) if v != null => v.toString
@@ -145,32 +149,31 @@ object compat {
           StringSplit(str, Literal(Pattern.quote(delim)), Literal(-1)),
           Literal(n), None, false),
         Literal("")))
-    def ifnull3Expr(c0: Expression, a: Expression, b: Expression): Expression =
-      CaseWhen(Seq((IsNull(c0), a)), Some(b))
-    def yearsExpr(from: Expression, to: Expression): Expression =
-      Cast(Subtract(Year(to), Year(from)), IntegerType)
+    def jsonField(args: Seq[Expression]): Expression =
+      GetJsonObject(args(0), Literal("$." + lit2str(args(1))))
 
-    reg.createOrReplaceTempFunction("piece",
-      args => pieceExpr(args(0), lit2str(args(1)), lit2str(args(2)).toInt),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("ifnull3",
-      args => ifnull3Expr(args(0), args(1), args(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("isnull2",
-      args => Coalesce(Seq(args(0), args(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("contains_code",
-      args => Contains(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("datediff_years",
-      args => yearsExpr(args(0), args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("getjson",
-      args => GetJsonObject(args(0),
-        Literal("$." + lit2str(args(1)))), "scala_udf")
-    reg.createOrReplaceTempFunction("getprop",
-      args => GetJsonObject(args(0),
-        Literal("$." + lit2str(args(1)))), "scala_udf")
-    reg.createOrReplaceTempFunction("get_fhirpath",
-      args => FhirPathExpr(args(0), args(1), one = false), "scala_udf")
-    reg.createOrReplaceTempFunction("get_fhirpath_one",
-      args => FhirPathExpr(args(0), args(1), one = true), "scala_udf")
+    Seq(
+      "piece" -> (args =>
+        pieceExpr(args(0), lit2str(args(1)), lit2str(args(2)).toInt)),
+      "ifnull3" -> (args => CaseWhen(Seq((IsNull(args(0)), args(1))),
+        Some(args(2)))),
+      "isnull2" -> (args => Coalesce(Seq(args(0), args(1)))),
+      "contains_code" -> (args => Contains(args(0), args(1))),
+      "datediff_years" -> (args =>
+        Cast(Subtract(Year(args(1)), Year(args(0))), IntegerType)),
+      "getjson" -> jsonField,
+      "getprop" -> jsonField,
+      "get_fhirpath" -> (args => FhirPathExpr(args(0), args(1), one = false)),
+      "get_fhirpath_one" -> (args =>
+        FhirPathExpr(args(0), args(1), one = true)),
+      "dot_product" -> (args => DotProduct(args(0), args(1))))
+  }
+
+  def registerAll(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    }
   }
 
   /** `GetFHIRPath(json, path)`: all matches as a JSON array string. */

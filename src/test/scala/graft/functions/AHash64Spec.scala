@@ -23,11 +23,16 @@ class AHash64Spec extends SparkSpec {
     } ++ Seq(None, Some(Seq.empty[Option[Long]]),
       Some(Seq(Some(0L))), Some((0 until 64).map(_ => Some(7L))))
     val df = rows.toDF("thumb").localCheckpoint(true)
-    val bad = df.select(
-        Multimodal.aHash(col("thumb")).as("fused"),
-        Multimodal.aHashComposed(col("thumb")).as("composed"))
-      .where(!(col("fused") <=> col("composed")))
-      .count()
-    assert(bad == 0L)
+    def mismatches(thumbs: org.apache.spark.sql.DataFrame): Long =
+      thumbs.select(
+          Multimodal.aHash(col("thumb")).as("fused"),
+          Multimodal.aHashComposed(col("thumb")).as("composed"))
+        .where(!(col("fused") <=> col("composed")))
+        .count()
+    assert(mismatches(df) == 0L, "array<bigint> flavor diverged")
+    // q134's decoder yields array<int> thumbs: the fused int branch
+    val dfi = df.select(col("thumb").cast("array<int>").as("thumb"))
+      .localCheckpoint(true)
+    assert(mismatches(dfi) == 0L, "array<int> flavor diverged")
   }
 }

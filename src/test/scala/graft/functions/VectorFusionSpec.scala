@@ -106,4 +106,31 @@ class VectorFusionSpec extends SparkSpec {
       .count()
     assert(bad == 0L)
   }
+
+  test("adc score throws on a negative or overflowing code, under codegen " +
+      "and interpreted eval") {
+    import org.apache.spark.sql.graftbridge.ExprBridge
+    val lut = Seq(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))
+    // 2^32 + 1 truncates to the valid index 1; -2 is a from-the-end index
+    // to element_at
+    val bad = Seq(Seq(0L, -2L), Seq((1L << 32) + 1, 0L))
+    def score(codes: Seq[Long]): Unit = {
+      val df = Seq((codes, lut)).toDF("codes", "lut").localCheckpoint(true)
+      df.select(ExprBridge.column(graft.functions.AdcScoreExpr(
+        ExprBridge.expr(col("codes")), ExprBridge.expr(col("lut")))))
+        .collect()
+    }
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    val modes = Seq(
+      "codegen" -> Seq.empty[(String, String)],
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for ((mode, conf) <- modes; codes <- bad) withConf(conf: _*) {
+      val e = intercept[Exception](score(codes))
+      assert(messages(e).contains("out of range"), s"$mode $codes")
+    }
+    withConf(modes(1)._2: _*)(score(Seq(2L, 0L))) // in range: no throw
+  }
 }
