@@ -15,10 +15,14 @@
 #   3. PlanShapeSpec re-checks the physical-plan invariants (pushdown,
 #      broadcast, exchange counts) that a new optimizer can silently
 #      change without breaking results.
+#   4. graft/sources/ZipCsvTable.scala, the pipeline's only zip reader,
+#      implements the DSv2 read and pushdown interfaces (column pruning,
+#      filters, limit) -> gated by graft.sources.ZipCsvSpec, which also
+#      pins its rows against Spark's own CSV reader.
 #
-# All three fail LOUDLY on an incompatible Spark (cast/linkage errors or
+# All four fail LOUDLY on an incompatible Spark (cast/linkage errors or
 # assertion failures), never silently degrade. After these pass, run the
 # full `sbt test` + the Verify/check_oracle loop per CLAUDE.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-exec sbt -batch "testOnly graft.core.CheckpointBridgeSpec graft.operators.TopKSpec graft.queries.PlanShapeSpec"
+exec sbt -batch "testOnly graft.core.CheckpointBridgeSpec graft.operators.TopKSpec graft.queries.PlanShapeSpec graft.sources.ZipCsvSpec"

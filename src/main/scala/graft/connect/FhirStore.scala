@@ -160,9 +160,12 @@ object FhirSinks {
     n.value
   }
 
-  /** S9: Task writeback — read latest, re-check version (optimistic
-    * concurrency, ConsultationNoteWritebackX.py:198-206), PUT the
-    * transition.
+  /** S9: Task writeback — per row, GET the latest Task, then PUT the
+    * `{status, note, output}` delta in its place. The GET's result is not
+    * used: no version is re-checked and the delta replaces the whole
+    * resource, so fields outside it are lost. The reference merges the
+    * delta into the re-read Task and compares `versionId` before its PUT
+    * (ConsultationNoteWritebackX.py:128-207).
     */
   def writebackTasks(updates: DataFrame, ref: StoreRef): Long = {
     val n = updates.sparkSession.sparkContext.longAccumulator("writebacks")

@@ -1,15 +1,17 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Upsert
 
 /** The ODS MDM batch pipeline (dags/ODSImport.py) as composable plan legs:
-  * S1 positional-CSV scans → P8 identifier extraction → J4/J5/J6 merges →
-  * T1–T3 document builds → U1–U3 MERGE action planning. Sinks
-  * (graft.connect.FhirSinks) apply the resulting action frames.
+  * S1 positional-CSV scans (the schemas below, read from the zipped feed
+  * by [[graft.sources.ZipCsv.read]]) → P8 identifier extraction →
+  * J4/J5/J6 merges → T1–T3 document builds → U1–U3 MERGE action
+  * planning. Sinks (graft.connect.FhirSinks) apply the resulting action
+  * frames.
   *
   * Scale shape: the national CSVs are dimension-sized (≈7k practices /
   * ≈50k GPs) — every merge broadcasts; nothing here shuffles the FHIR
@@ -34,16 +36,6 @@ object OdsImport {
       "AddressLine_5", "PostCode", "Started", "Ended", "Status", "c14",
       "ODS", "c16", "c17", "PhoneNumber", "c19", "c20", "c21", "c22",
       "c23", "c24", "c25", "c26").map(StructField(_, StringType, true)))
-
-  /** S1: read a headerless ODS CSV (unzipped upstream — the reference
-    * fetches+unzips driver-side; at scale use binaryFiles+flatMap).
-    */
-  def readOdsCsv(spark: SparkSession, path: String,
-      schema: StructType): DataFrame =
-    // escape='"': RFC4180 doubled-quote escaping — pandas read_csv's
-    // default, i.e. the reference's parse (see ZipCsv.read's note)
-    spark.read.schema(schema).option("header", "false")
-      .option("escape", "\"").csv(path)
 
   /** P8: pull the code out of a comma-joined "system|value" identifier
     * list for the given system-regex (dags/ODSImport.py:129-135) — the

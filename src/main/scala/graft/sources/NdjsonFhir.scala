@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.streaming.{TaskPoller, Writeback}
+
 /** Newline-delimited FHIR source (S10: the reference's Synthea bundle /
   * Task corpus shape, README.md:42-64 in the reference repo), reproducing
   * the IRIS DUAL PROJECTION the reference queries rely on (SURVEY §1.1):
@@ -21,15 +23,6 @@ object NdjsonFhir {
 
   private val identifierType: StructType = new StructType()
     .add("system", StringType).add("value", StringType)
-
-  /** The Task fields the polling workflow touches (S5/X3 surface). */
-  val taskSchema: StructType = new StructType()
-    .add("resourceType", StringType)
-    .add("id", StringType)
-    .add("status", StringType)
-    .add("authoredOn", StringType)
-    .add("meta", new StructType().add("versionId", StringType))
-    .add("focus", new StructType().add("identifier", identifierType))
 
   /** Bundle-entry resource fields the writeback pipeline shreds (P9). */
   val bundleSchema: StructType = new StructType()
@@ -56,26 +49,15 @@ object NdjsonFhir {
       .withColumn("parse_error", col("r").isNull ||
         col("r.resourceType").isNull)
 
-  /** Tasks with the S5 poll shape applied as a BATCH plan: status filter,
-    * runaway-version guard, newest-first top-k — the same predicate set
-    * the streaming TaskPoller pushes into its poll.
+  /** Tasks polled from an NDJSON file as a BATCH plan: the same parse
+    * ([[TaskPoller.parse]]) and poll policy ([[Writeback.pollFilter]]) as
+    * the store poll, reading the raw JSON from lines instead of a search.
     */
-  def pollTasks(spark: SparkSession, path: String, status: String = "accepted",
-      maxVersion: Int = 1000, count: Int = 5): DataFrame =
-    read(spark, path, taskSchema)
-      .filter(!col("parse_error"))
-      .filter(col("r.resourceType") === "Task" &&
-        col("r.status") === status &&
-        // try_cast: a malformed versionId must not ANSI-throw the poll;
-        // it counts as version 0 (pollable), matching the reference's
-        // int() guard only firing on present numeric ids
-        coalesce(expr("try_cast(r.meta.versionId AS int)"), lit(0))
-          <= maxVersion)
-      .select(col("r.id").as("task_id"), col("r.status").as("status"),
-        col("r.authoredOn").as("authored_on"),
-        col("resource_string"))
-      .orderBy(col("authored_on").desc, col("task_id"))
-      .limit(count)
+  def pollTasks(spark: SparkSession, path: String, cutoff: String,
+      count: Int = 5): DataFrame =
+    Writeback.pollFilter(
+      TaskPoller.parse(spark.read.textFile(path).toDF("json"), "json"),
+      cutoff, count)
 
   /** Bundle entries exploded to one row per resource, with the entry's
     * raw JSON rebuilt for downstream FHIRPath (the shredded child-table

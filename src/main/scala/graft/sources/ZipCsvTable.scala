@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -18,14 +18,35 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** S1 as a REAL DataSource V2 connector (`spark.read.format("zipcsv")`):
-  * the idiomatic endgame for the ODS zip+CSV feed (dags/ODSImport.py:77-100)
-  * that [[ZipCsv.read]] covers with `binaryFiles`+flatMap.
+/** S1 — distributed ZIP+CSV source (dags/ODSImport.py:77-100: GET zip →
+  * open member csv → headerless positional parse). The reference unzips
+  * driver-side with pandas; this source unzips in executors, so a
+  * directory of archives (the 100 TB shape: one archive per publication
+  * cycle) fans out across the cluster. The HTTP fetch stays outside the
+  * plan (download to storage, then scan), the fetch-then-load split the
+  * reference uses.
+  */
+object ZipCsv {
+
+  /** Every `.csv` member of every zip under `path` (a directory, a glob or
+    * one archive) as a DataFrame with the given headerless schema.
+    */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    // the provider by class, not by its "zipcsv" short name: the short
+    // name needs META-INF/services on the classpath, which a bare
+    // compile output directory lacks
+    spark.read.format(classOf[ZipCsvTableProvider].getName)
+      .schema(schema).load(path)
+}
+
+/** The DataSource V2 connector behind [[ZipCsv.read]]
+  * (`spark.read.format("zipcsv")`).
   *
   * Scale shape and pushdown story:
   *  - one [[InputPartition]] per zip archive — a directory of publication
   *    cycles fans out one task per archive across the cluster, any
-  *    Hadoop-compatible filesystem;
+  *    Hadoop-compatible filesystem; members stream line by line, never
+  *    buffered whole;
   *  - COLUMN PRUNING reaches the parser: the reader splits each CSV line
   *    only up to the last required position (a 2-column projection of the
   *    26-column epraccur row never materializes the other 24 fields);
@@ -40,11 +61,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    is pure early pruning (the reference's predicate-at-source shape,
   *    dags/ODSImport.py:122,359).
   *
+  * Parsing is RFC4180 with doubled-quote escaping — pandas read_csv's
+  * default (doublequote=True) and therefore the reference's semantics
+  * (dags/ODSImport.py:100). Only members ending in `.csv` are read.
+  *
   * Schema: caller-supplied (`.schema(...)`, the headerless positional
   * contract), or inferred as all-string c1..cN by sniffing the first
   * matching member's first line. Empty fields — quoted or not — read as
-  * NULL and blank lines are skipped (Spark CSV's defaults: nullValue=""
-  * applies after unquoting; both spec-pinned against [[ZipCsv.read]]).
+  * NULL and blank lines are skipped, as Spark's own CSV reader does with
+  * `escape='"'` (`ZipCsvSpec` pins the rows against it).
   */
 class ZipCsvTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zipcsv"
@@ -52,13 +77,12 @@ class ZipCsvTableProvider extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = ZipCsvTable.pathOf(options)
-    val suffix = ZipCsvTable.suffixOf(options)
     val files = ZipCsvTable.listZips(path)
     require(files.nonEmpty, s"zipcsv: no archives under $path")
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val first = ZipCsvTable.firstLine(files.head, suffix, conf).getOrElse(
+    val first = ZipCsvTable.firstLine(files.head, conf).getOrElse(
       throw new IllegalArgumentException(
-        s"zipcsv: no '$suffix' member with rows in ${files.head}"))
+        s"zipcsv: no '${ZipCsvTable.Suffix}' member with rows in ${files.head}"))
     val n = ZipCsvTable.splitCsv(first, Int.MaxValue).length
     StructType((1 to n).map(i => StructField(s"c$i", StringType, true)))
   }
@@ -75,14 +99,14 @@ object ZipCsvTable {
     require(p != null, "zipcsv: option 'path' is required")
     p
   }
-  private[sources] def suffixOf(options: CaseInsensitiveStringMap): String =
-    Option(options.get("memberSuffix")).getOrElse(".csv")
+  /** Archive members read as CSV; every other member is skipped. */
+  private[sources] val Suffix = ".csv"
 
   /** Planning-time listing: directory, glob, or a single file.
     * `globStatus` first — it resolves literal paths AND patterns (a
     * `getFileStatus` probe would throw FileNotFoundException on a glob
     * like `dir/&#42;.zip` before any pattern branch ran) — then any matched
-    * directory expands one level, mirroring `binaryFiles(dir)`.
+    * directory expands one level.
     */
   private[sources] def listZips(path: String): Seq[String] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
@@ -94,14 +118,14 @@ object ZipCsvTable {
     statuses.filter(_.isFile).map(_.getPath.toString).sorted
   }
 
-  private[sources] def firstLine(file: String, suffix: String,
+  private[sources] def firstLine(file: String,
       conf: Configuration): Option[String] = {
     val in = new Path(file).getFileSystem(conf).open(new Path(file))
     val zis = new ZipInputStream(in)
     try {
       var entry = zis.getNextEntry
       while (entry != null) {
-        if (!entry.isDirectory && entry.getName.endsWith(suffix)) {
+        if (!entry.isDirectory && entry.getName.endsWith(Suffix)) {
           val r = new java.io.BufferedReader(
             new java.io.InputStreamReader(zis, "UTF-8"))
           var line = r.readLine()
@@ -196,7 +220,7 @@ object ZipCsvTable {
         }
         // Spark CSV applies nullValue="" AFTER unquoting, so a quoted
         // empty field reads as NULL exactly like an unquoted one
-        // (spec-pinned v1 parity)
+        // (spec-pinned against Spark's CSV reader)
         out += (if (sb.length == 0) null else sb.toString)
         // skip to the delimiter (tolerate junk after the close quote)
         while (i < n && line.charAt(i) != ',') i += 1
@@ -256,12 +280,12 @@ class ZipCsvScanBuilder(full: StructType, options: CaseInsensitiveStringMap)
     val confMap = conf.iterator().asScala
       .map(e => e.getKey -> e.getValue).toMap
     ZipCsvScan(full, required, pushed, limit,
-      ZipCsvTable.pathOf(options), ZipCsvTable.suffixOf(options), confMap)
+      ZipCsvTable.pathOf(options), confMap)
   }
 }
 
 case class ZipCsvScan(full: StructType, required: StructType,
-    filters: Array[Filter], pushedLimit: Int, path: String, suffix: String,
+    filters: Array[Filter], pushedLimit: Int, path: String,
     confMap: Map[String, String]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -276,19 +300,19 @@ case class ZipCsvScan(full: StructType, required: StructType,
       ZipCsvInputPartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ZipCsvReaderFactory(full, required, filters, pushedLimit, suffix, confMap)
+    ZipCsvReaderFactory(full, required, filters, pushedLimit, confMap)
 }
 
 case class ZipCsvInputPartition(file: String) extends InputPartition
 
 case class ZipCsvReaderFactory(full: StructType, required: StructType,
-    filters: Array[Filter], pushedLimit: Int, suffix: String,
+    filters: Array[Filter], pushedLimit: Int,
     confMap: Map[String, String]) extends PartitionReaderFactory {
   override def createReader(
       partition: InputPartition): PartitionReader[InternalRow] =
     new ZipCsvPartitionReader(
       partition.asInstanceOf[ZipCsvInputPartition].file,
-      full, required, filters, pushedLimit, suffix, confMap)
+      full, required, filters, pushedLimit, confMap)
 }
 
 /** One archive's reader: walks matching members, splits each line only up
@@ -297,7 +321,7 @@ case class ZipCsvReaderFactory(full: StructType, required: StructType,
   */
 class ZipCsvPartitionReader(file: String, full: StructType,
     required: StructType, filters: Array[Filter], pushedLimit: Int,
-    suffix: String, confMap: Map[String, String])
+    confMap: Map[String, String])
     extends PartitionReader[InternalRow] {
 
   // required field -> its position in the full positional schema
@@ -329,7 +353,7 @@ class ZipCsvPartitionReader(file: String, full: StructType,
     }
 
   /** Advance to the next non-blank line across matching members (blank
-    * lines are skipped, matching the v1 Spark-CSV path's univocity
+    * lines are skipped, matching Spark's CSV reader's univocity
     * skipEmptyLines default — spec-pinned parity).
     */
   private def nextLine(): String = {
@@ -346,7 +370,7 @@ class ZipCsvPartitionReader(file: String, full: StructType,
       } else {
         val entry = zis.getNextEntry
         if (entry == null) return null
-        if (!entry.isDirectory && entry.getName.endsWith(suffix)) {
+        if (!entry.isDirectory && entry.getName.endsWith(ZipCsvTable.Suffix)) {
           reader = new java.io.BufferedReader(
             new java.io.InputStreamReader(zis, "UTF-8"))
           inMember = true

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.connect.StoreRef
+import graft.connect.{FhirSources, StoreRef}
 
 /** S5 — the polling Task source as a streaming query: a trigger clock
   * (rate source by default) fires every interval; each micro-batch
@@ -22,7 +22,11 @@ import graft.connect.StoreRef
   */
 object TaskPoller {
 
+  /** The Task fields the S5/X3 workflow touches — the one Task schema,
+    * whichever source the raw JSON comes from.
+    */
   val taskSchema: StructType = StructType(Seq(
+    StructField("resourceType", StringType),
     StructField("id", StringType), StructField("status", StringType),
     StructField("authoredOn", StringType),
     StructField("meta", StructType(Seq(
@@ -34,22 +38,32 @@ object TaskPoller {
     StructField("note", ArrayType(StructType(Seq(
       StructField("time", StringType), StructField("text", StringType)))))))
 
-  /** One poll: search → parse → the S5 filter/sort/limit shape. */
-  def poll(spark: SparkSession, ref: StoreRef, cutoff: String,
-      count: Int): DataFrame = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    implicit val enc: Encoder[String] = Encoders.STRING
-    val raw = spark.createDataset(ref.store.search("Task")).toDF("json")
-    val parsed = raw.select(from_json(col("json"), taskSchema).as("t"))
+  /** Raw Task JSON (column `json` of `raw`) → the columns
+    * [[Writeback.pollFilter]] and [[Writeback.classify]] read. A line
+    * that is not JSON parses to null fields, which the poll's status
+    * filter drops; a resource that declares another type is not a Task.
+    */
+  def parse(raw: DataFrame, json: String): DataFrame =
+    raw.select(from_json(col(json), taskSchema).as("t"))
+      .filter(coalesce(col("t.resourceType"), lit("Task")) === "Task")
       .select(
         col("t.id").as("id"), col("t.status").as("status"),
-        coalesce(col("t.meta.versionId"), lit("1")).as("versionId"),
+        col("t.meta.versionId").as("versionId"),
         col("t.authoredOn").as("authoredOn"),
         col("t.focus.identifier.system").as("focusSystem"),
         col("t.focus.identifier.value").as("focusValue"),
         col("t.note").as("note"))
-    Writeback.pollFilter(parsed, cutoff, count)
-  }
+
+  /** One poll: the store search pushes `status=accepted` down, then the
+    * S5 filter/sort/limit shape runs on the parsed Tasks —
+    * [[Writeback.pollFilter]] stays the authoritative filter.
+    */
+  def poll(spark: SparkSession, ref: StoreRef, cutoff: String,
+      count: Int): DataFrame =
+    Writeback.pollFilter(
+      parse(FhirSources.search(spark, ref, "Task", Int.MaxValue,
+        "status" -> "accepted"), "resource"),
+      cutoff, count)
 
   /** The 1-minute poll loop. `ticks` defaults to a rate source; tests pass
     * a MemoryStream so the loop is fully deterministic.

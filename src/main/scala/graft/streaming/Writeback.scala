@@ -22,15 +22,21 @@ import graft.functions.compat
   */
 object Writeback {
 
+  /** A Task's version as the poll policy reads it: a missing or malformed
+    * `versionId` counts as 0 — pollable and never an ANSI cast error, as
+    * the reference's int() guards only fire on numeric ids.
+    */
+  val taskVersion: Column = coalesce(col("versionId").try_cast("int"), lit(0))
+
   /** S5 poll shape: status=accepted, authored-on > cutoff, newest first,
-    * top `count`, runaway guard versionId<=1000
+    * top `count`, runaway guard version<=1000
     * (ConsultationNoteWritebackX.py:63-96).
     */
   def pollFilter(tasks: DataFrame, cutoff: String, count: Int = 5): DataFrame =
     tasks
       .filter(col("status") === "accepted" &&
         col("authoredOn") > lit(cutoff) &&
-        col("versionId").cast("int") <= 1000)
+        taskVersion <= 1000)
       .orderBy(col("authoredOn").desc, col("id"))
       .limit(count)
 
@@ -54,7 +60,7 @@ object Writeback {
 
     // X3 Already_Done branch (ConsultationNoteWritebackX.py:401-411)
     val withSkip = tasks.withColumn("skip",
-      col("versionId").cast("int") > 100 || col("status") === "completed")
+      taskVersion > 100 || col("status") === "completed")
 
     // S4 join: fetch the consultation for the task's focus identifier
     val withBundle = withSkip.join(

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.TaskPoller
 
 class NdjsonFhirSpec extends SparkSpec {
   import spark.implicits._
@@ -26,7 +27,7 @@ class NdjsonFhirSpec extends SparkSpec {
   test("dual projection: raw line preserved byte-for-byte next to the " +
       "shredded struct; corrupt lines flagged, never dropped") {
     val path = writeNdjson(tasks)
-    val df = NdjsonFhir.read(spark, path, NdjsonFhir.taskSchema)
+    val df = NdjsonFhir.read(spark, path, TaskPoller.taskSchema)
     assert(df.count() == 6) // every line lands, including the corrupt one
     assert(df.filter(col("parse_error")).count() == 1)
     // the raw string survives untouched (FHIRPath / writeback contract)
@@ -42,11 +43,13 @@ class NdjsonFhirSpec extends SparkSpec {
 
   test("pollTasks applies the S5 shape: status filter, runaway guard, " +
       "newest-first top-k; malformed versionId never throws") {
-    val path = writeNdjson(tasks)
-    val got = NdjsonFhir.pollTasks(spark, path, count = 2)
-      .select(col("task_id")).as[String].collect().toSeq
+    val path = writeNdjson(tasks :+
+      """{"resourceType":"Patient","id":"p1","status":"accepted","authoredOn":"2025-07-07T10:00:00+00:00"}""")
+    val got = NdjsonFhir.pollTasks(spark, path, "2025-07-01", count = 2)
+      .select(col("id")).as[String].collect().toSeq
     // t3 wrong status, t4 versionId 1044 > 1000 guarded, t5 malformed
-    // version counts as 0 (pollable); newest-first -> t5 then t2
+    // version counts as 0 (pollable), p1 not a Task; newest-first -> t5
+    // then t2
     assert(got == Seq("t5", "t2"))
   }
 

@@ -1,9 +1,14 @@
 package graft.sources
 
-import java.io.FileOutputStream
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.io.{File, FileOutputStream}
+import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.SparkSpec
 import graft.etl.OdsImport
@@ -11,17 +16,47 @@ import graft.etl.OdsImport
 class ZipCsvSpec extends SparkSpec {
   import spark.implicits._
 
-  private def makeZip(member: String, content: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("zipcsv").toFile
-    val f = new java.io.File(dir, "epraccur.zip")
-    val zos = new ZipOutputStream(new FileOutputStream(f))
-    zos.putNextEntry(new ZipEntry("readme.txt"))
-    zos.write("ignore me".getBytes)
-    zos.putNextEntry(new ZipEntry(member))
-    zos.write(content.getBytes)
+  private def writeZip(dir: File, name: String,
+      entries: (String, String)*): Unit = {
+    val zos = new ZipOutputStream(new FileOutputStream(new File(dir, name)))
+    entries.foreach { case (member, content) =>
+      zos.putNextEntry(new ZipEntry(member))
+      zos.write(content.getBytes("UTF-8"))
+    }
     zos.close()
-    f.getAbsolutePath
   }
+
+  private def makeZip(member: String, content: String): String = {
+    val dir = Files.createTempDirectory("zipcsv").toFile
+    writeZip(dir, "epraccur.zip", "readme.txt" -> "ignore me",
+      member -> content)
+    new File(dir, "epraccur.zip").getAbsolutePath
+  }
+
+  /** The independent oracle: every `.csv` member of the archive at `path`
+    * (or of every archive in the directory `path`) written out as a plain
+    * file, then read by Spark's own CSV reader with `escape='"'` — RFC4180
+    * doubled-quote escaping, the reference's pandas parse.
+    */
+  private def sparkCsv(path: String, schema: StructType): DataFrame = {
+    val out = Files.createTempDirectory("zipcsv-oracle")
+    val src = new File(path)
+    val zips = if (src.isDirectory) src.listFiles().toSeq else Seq(src)
+    zips.filter(_.getName.endsWith(".zip")).foreach { z =>
+      val zf = new ZipFile(z)
+      try zf.entries().asScala.filter(_.getName.endsWith(".csv")).foreach {
+        e => Files.copy(zf.getInputStream(e),
+          out.resolve(s"${z.getName}-${e.getName}"))
+      } finally zf.close()
+    }
+    spark.read.schema(schema).option("header", "false")
+      .option("escape", "\"").csv(out.toString)
+  }
+
+  private def rows(df: DataFrame): Seq[(Option[String], Option[String],
+      Option[String])] =
+    df.as[(Option[String], Option[String], Option[String])]
+      .collect().sortBy(_._1).toSeq
 
   test("S1: unzips the csv member in executors and applies the schema") {
     val csv = (Seq.fill(24)("") match { case pad =>
@@ -47,54 +82,44 @@ class ZipCsvSpec extends SparkSpec {
   // ---- the DSv2 connector (spark.read.format("zipcsv")) ----
 
   /** A directory of two archives with quoted/escaped/empty fields and a
-    * skipped non-csv member — the DSv2 rows must match [[ZipCsv.read]]'s
-    * (Spark CSV reader) on the same bytes, field for field.
+    * skipped non-csv member — the DSv2 rows must match Spark's CSV reader
+    * on the same member bytes, field for field.
     */
   private def makeZipDir(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("zipcsv-v2").toFile
-    def zip(name: String, entries: (String, String)*): Unit = {
-      val zos = new ZipOutputStream(
-        new FileOutputStream(new java.io.File(dir, name)))
-      entries.foreach { case (member, content) =>
-        zos.putNextEntry(new ZipEntry(member))
-        zos.write(content.getBytes("UTF-8"))
-      }
-      zos.close()
-    }
-    zip("a.zip",
+    val dir = Files.createTempDirectory("zipcsv-v2").toFile
+    writeZip(dir, "a.zip",
       "skip.bin" -> "not,csv",
       "a.csv" -> Seq(
         "A1,\"Name, with comma\",x",
         "A2,\"He said \"\"hi\"\"\",", // escaped quotes + trailing empty
         "A3,,plain").mkString("\n"))
-    zip("b.zip", "b.csv" -> "B1,second archive,y")
+    writeZip(dir, "b.zip", "b.csv" -> "B1,second archive,y")
     dir.getAbsolutePath
   }
 
-  private val v2Schema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("k",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("name",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("v",
-      org.apache.spark.sql.types.StringType)))
+  private val v2Schema = StructType(Seq(StructField("k", StringType),
+    StructField("name", StringType), StructField("v", StringType)))
 
   test("DSv2 zipcsv: short-name registration, one partition per archive, " +
-      "rows byte-identical to the binaryFiles path on quoted/escaped/" +
-      "empty fields") {
+      "rows identical to Spark's CSV reader on quoted/escaped/empty " +
+      "fields and CRLF line ends") {
     val dir = makeZipDir()
+    // CRLF line ends; a doubled quote around an embedded comma
+    writeZip(new File(dir), "c.zip", "c.csv" -> Seq(
+      "C1,\"say \"\"a, b\"\"\",z",
+      "C2,\"x,y\",").mkString("", "\r\n", "\r\n"))
     val v2 = spark.read.format("zipcsv").schema(v2Schema).load(dir)
-    val v1 = ZipCsv.read(spark, dir + "/*", v2Schema)
-    assert(v2.rdd.getNumPartitions == 2) // one task per archive
-    val a = v2.as[(Option[String], Option[String], Option[String])]
-      .collect().sortBy(_._1)
-    val b = v1.as[(Option[String], Option[String], Option[String])]
-      .collect().sortBy(_._1)
-    assert(a.toSeq == b.toSeq, s"v2 ${a.toSeq} vs v1 ${b.toSeq}")
-    assert(a.map(_._1.get).toSeq == Seq("A1", "A2", "A3", "B1"))
+    assert(v2.rdd.getNumPartitions == 3) // one task per archive
+    val a = rows(v2)
+    val b = rows(sparkCsv(dir, v2Schema))
+    assert(a == b, s"zipcsv $a vs Spark CSV $b")
+    assert(rows(ZipCsv.read(spark, dir + "/*", v2Schema)) == b)
+    assert(a.map(_._1.get) == Seq("A1", "A2", "A3", "B1", "C1", "C2"))
     assert(a(0)._2.contains("Name, with comma"))
     assert(a(1)._2.contains("He said \"hi\""))
-    assert(a(2)._2.isEmpty) // unquoted empty -> NULL, both paths
+    assert(a(2)._2.isEmpty) // unquoted empty -> NULL
+    assert(a(4) == ((Some("C1"), Some("say \"a, b\""), Some("z"))))
+    assert(a(5) == ((Some("C2"), Some("x,y"), None))) // no stray CR
   }
 
   test("DSv2 zipcsv: column pruning reaches the reader (pruned read " +
@@ -123,31 +148,21 @@ class ZipCsvSpec extends SparkSpec {
     val dir = makeZipDir()
     val v2 = spark.read.format("zipcsv").schema(v2Schema)
       .load(dir + "/*.zip")
-    val v1 = ZipCsv.read(spark, dir + "/*.zip", v2Schema)
-    assert(v2.select("k").as[String].collect().sorted.toSeq ==
-      v1.select("k").as[String].collect().sorted.toSeq)
+    assert(rows(v2) == rows(sparkCsv(dir, v2Schema)))
     assert(v2.count() == 4)
   }
 
   test("DSv2 zipcsv: blank interior lines and quoted-empty fields match " +
       "the v1 path (blank skipped, quoted-empty null like unquoted)") {
-    val dir = java.nio.file.Files.createTempDirectory("zipcsv-blank").toFile
-    val zos = new ZipOutputStream(
-      new FileOutputStream(new java.io.File(dir, "x.zip")))
-    zos.putNextEntry(new ZipEntry("x.csv"))
-    zos.write(Seq(
+    val dir = Files.createTempDirectory("zipcsv-blank").toFile
+    writeZip(dir, "x.zip", "x.csv" -> Seq(
       "A1,\"\",x", // quoted empty -> NULL (nullValue="" post-unquote)
       "",          // blank line -> skipped entirely, not an all-null row
-      "A2,b,y").mkString("\n").getBytes("UTF-8"))
-    zos.close()
+      "A2,b,y").mkString("\n"))
     val p = dir.getAbsolutePath
-    val v2 = spark.read.format("zipcsv").schema(v2Schema).load(p)
-    val v1 = ZipCsv.read(spark, p + "/*", v2Schema)
-    val a = v2.as[(Option[String], Option[String], Option[String])]
-      .collect().sortBy(_._1).toSeq
-    val b = v1.as[(Option[String], Option[String], Option[String])]
-      .collect().sortBy(_._1).toSeq
-    assert(a == b, s"v2 $a vs v1 $b")
+    val a = rows(spark.read.format("zipcsv").schema(v2Schema).load(p))
+    val b = rows(sparkCsv(p, v2Schema))
+    assert(a == b, s"zipcsv $a vs Spark CSV $b")
     assert(a.size == 2) // the blank line yields NO row on either path
     assert(a(0)._2.isEmpty) // quoted empty -> NULL, both paths
   }
@@ -168,7 +183,7 @@ class ZipCsvSpec extends SparkSpec {
       s"no filters pushed: ${sc.description()}")
     assert(sc.description().contains("PushedFilters"))
     val got = pushed.as[String].collect().sorted.toSeq
-    val v1 = ZipCsv.read(spark, dir + "/*", v2Schema)
+    val v1 = sparkCsv(dir, v2Schema)
       .filter(col("v") === "x" || col("v").isNull)
       .select("k").as[String].collect().sorted.toSeq
     assert(got == v1 && got == Seq("A1", "A2"), s"pushed $got vs v1 $v1")
@@ -205,5 +220,8 @@ class ZipCsvSpec extends SparkSpec {
       .as[(String, String, Option[String])].collect().sortBy(_._1)
     assert(got(0) == (("B86030", "THE SURGERY", Some("Y56"))))
     assert(got(1) == (("C55555", "OTHER", None)))
+    assert(df.collect().sortBy(_.getString(0)).toSeq ==
+      sparkCsv(path, OdsImport.epraccurSchema).collect()
+        .sortBy(_.getString(0)).toSeq)
   }
 }

@@ -196,9 +196,9 @@ class WritebackSpec extends SparkSpec {
       // is the queue (X12), so the drained loop is idempotent
       assert(batches == Vector(3L, 0L), s"writebacks per tick: $batches")
       // the timed-out search really was retried: the first two wire
-      // requests are both the tick-1 search
+      // requests are both the tick-1 search, status=accepted pushed down
       assert(srv.log.take(2).map(r => (r.method, r.path)) ==
-        Seq(("GET", "Task"), ("GET", "Task")),
+        Seq.fill(2)(("GET", "Task?status=accepted")),
         s"wire head was ${srv.log.take(3)}")
       // wire truth of each branch's transition
       assert(srv.contents("Task/t1").contains("\"completed\"") &&
