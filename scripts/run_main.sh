@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes + Spark jars
 # (bypasses sbt startup). Usage: scripts/run_main.sh graft.Verify ARGS...
+# src/main/resources rides on the classpath so its META-INF/services (the
+# "zipcsv" short name) resolves after a bare `sbt compile`.
 set -e
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
@@ -13,4 +15,4 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
 done
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" "$@"

@@ -16,9 +16,9 @@
 #      broadcast, exchange counts) that a new optimizer can silently
 #      change without breaking results.
 #   4. graft/sources/ZipCsvTable.scala, the pipeline's only zip reader,
-#      implements the DSv2 read and pushdown interfaces (column pruning,
-#      filters, limit) -> gated by graft.sources.ZipCsvSpec, which also
-#      pins its rows against Spark's own CSV reader.
+#      implements the DSv2 read interfaces and column pruning
+#      (SupportsPushDownRequiredColumns) -> gated by graft.sources.ZipCsvSpec,
+#      which also pins its rows against Spark's own CSV reader.
 #
 # All four fail LOUDLY on an incompatible Spark (cast/linkage errors or
 # assertion failures), never silently degrade. After these pass, run the

@@ -105,15 +105,14 @@ case class HttpStoreRef(baseUrl: String, retries: Int = 3,
 }
 
 object FhirSources {
-  /** S4: a FHIR search materialized as a DataFrame of resource JSON.
-    * Search params compile to pushed filters at the store; the limit is
-    * honored source-side (the `_count` pushdown, SURVEY §4).
+  /** S4: a FHIR search materialized as a DataFrame of resource JSON, one
+    * `resource` row per match. Search params compile to pushed filters at
+    * the store.
     */
   def search(spark: SparkSession, ref: StoreRef, resourceType: String,
-      limit: Int, params: (String, String)*): DataFrame = {
+      params: (String, String)*): DataFrame = {
     implicit val enc: Encoder[String] = Encoders.STRING
-    spark.createDataset(
-      ref.store.search(resourceType, params: _*).take(limit))
+    spark.createDataset(ref.store.search(resourceType, params: _*))
       .toDF("resource")
   }
 }

@@ -38,13 +38,6 @@ object EventStreams {
       .select(col("window.start").as("bucket"), col("event_type"),
         col("n"), col("total_value"))
 
-  /** Per-user event counters with state — mapGroupsWithState shape for the
-    * custom-state path (kept simple: running count + last seen ts).
-    */
-  def runningUserCounts(events: DataFrame): DataFrame =
-    events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), max(col("ts")).as("last_seen"))
-
   /** Watermarked SLIDING-window stats: each event lands in
     * windowLen/slide overlapping buckets (q62 is the batch-oracled form).
     */

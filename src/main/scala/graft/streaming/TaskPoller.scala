@@ -61,8 +61,8 @@ object TaskPoller {
   def poll(spark: SparkSession, ref: StoreRef, cutoff: String,
       count: Int): DataFrame =
     Writeback.pollFilter(
-      parse(FhirSources.search(spark, ref, "Task", Int.MaxValue,
-        "status" -> "accepted"), "resource"),
+      parse(FhirSources.search(spark, ref, "Task", "status" -> "accepted"),
+        "resource"),
       cutoff, count)
 
   /** The 1-minute poll loop. `ticks` defaults to a rate source; tests pass

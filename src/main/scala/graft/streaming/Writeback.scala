@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.etl.{FhirBuilders, QuestionnaireRestructure, Validation}
 import graft.functions.compat
@@ -11,9 +10,11 @@ import graft.functions.compat
   * (dags/ConsultationNoteWritebackX.py) re-expressed Spark-first: the
   * Airflow DAG-per-task fan-out (X2) becomes rows of a micro-batch, each
   * branch operator (X3–X8) a filter/when column, XCom side-channels (X10)
-  * plain carried columns, and the 1-minute poll (X1/S5) a Structured
-  * Streaming trigger driving `foreachBatch` over the identical batch
-  * transform — one code path for streaming, batch and the X11 requeue job.
+  * plain carried columns. The 1-minute poll (X1/S5) is
+  * [[TaskPoller.start]], which re-polls the store per trigger and hands
+  * each batch to its sink:
+  * `TaskPoller.start(sink = b => FhirSinks.writebackTasks(taskWriteback(classify(b, …)), ref))`
+  * — one code path for streaming, batch and the X11 requeue job.
   *
   * Inputs are DataFrames wherever the reference calls REST mid-pipeline:
   * `consultations` = the `$extract-collection` results keyed by encounter
@@ -48,15 +49,11 @@ object Writeback {
     *              bundleJson — the `$extract-collection` response per task focus
     * @param compositions columns: patientId, encounterId — EMIS compositions
     *              (already shredded to the two probe keys)
-    * @param validationFails optional override for the T10 gate (defaults to
-    *              structural message validation)
     */
   def classify(
       tasks: DataFrame,
       consultations: DataFrame,
-      compositions: DataFrame,
-      utcNow: Column = compat.utcStamp(),
-      validationFails: Column => Column = Validation.operationOutcomeFails): DataFrame = {
+      compositions: DataFrame): DataFrame = {
 
     // X3 Already_Done branch (ConsultationNoteWritebackX.py:401-411)
     val withSkip = tasks.withColumn("skip",
@@ -117,7 +114,8 @@ object Writeback {
 
     // X4 validation gate (T10) on the built message
     val withValid = withDup.withColumn("validation_failed",
-      when(col("message").isNotNull, validationFails(col("message")))
+      when(col("message").isNotNull,
+        Validation.operationOutcomeFails(col("message")))
         .otherwise(lit(false)))
 
     // X5 endpoint routing — constant EMIS in the reference (line 293-295);
@@ -167,24 +165,4 @@ object Writeback {
       .select(col("id"), lit("accepted").as("status"),
         FhirBuilders.appendNote(col("note"), utcNow,
           lit("Requeued by Workflow-NOS")).as("note"))
-
-  /** X1: the 1-minute poll as a streaming query. Any streaming task source
-    * works (file, rate-driven REST poll from graft.connect); the batch
-    * transform is exactly [[classify]]+[[taskWriteback]], applied per
-    * micro-batch.
-    */
-  def start(
-      taskStream: DataFrame,
-      consultations: DataFrame,
-      compositions: DataFrame,
-      sink: DataFrame => Unit,
-      checkpoint: String,
-      interval: String = "60 seconds"): StreamingQuery =
-    taskStream.writeStream
-      .trigger(Trigger.ProcessingTime(interval))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(taskWriteback(classify(batch, consultations, compositions)))
-      }
-      .start()
 }

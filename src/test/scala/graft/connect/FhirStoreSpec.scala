@@ -75,10 +75,15 @@ class FhirStoreSpec extends SparkSpec {
     assert(ref.store.search("Task", "owner" -> """O"Brien""").size == 1)
   }
 
-  test("S4 search source honors the _count limit pushdown") {
+  test("S4 search source returns every stored match as a resource row") {
     val ref = StoreRef("search-test")
-    (1 to 5).foreach(i => ref.store.update("Task", i.toString, s"""{"n":$i}"""))
-    val df = FhirSources.search(spark, ref, "Task", limit = 3)
-    assert(df.count() == 3)
+    (1 to 5).foreach(i => ref.store.update("Task", i.toString,
+      s"""{"n":$i,"status":"${if (i % 2 == 1) "accepted" else "completed"}"}"""))
+    ref.store.update("Patient", "p", """{"status":"accepted"}""")
+    val df = FhirSources.search(spark, ref, "Task", "status" -> "accepted")
+    assert(df.columns.toSeq == Seq("resource"))
+    val got = df.as[String].collect().sorted.toSeq
+    assert(got == Seq(1, 3, 5).map(i => s"""{"n":$i,"status":"accepted"}"""),
+      s"search rows: $got")
   }
 }

@@ -79,6 +79,35 @@ class OdsImportSpec extends SparkSpec {
     assert(plan("G3") == "update") // ended → active flip + period.end diff
   }
 
+  test("J5+J6 role merge: inner on ODS, practitioner and organisation " +
+      "ids carried, stored roles matched on (ODS, GMP)") {
+    val practitioners = Seq(
+      // GMP, Practitioner_Name, Started, Ended, ODS, _id (merged practitioner)
+      ("G1", "KOYA M R", "20200101", "", "B86030", "p1"),
+      ("G2", "NEW DR", "20210101", "", "B86030", "p2"),
+      ("G9", "ORPHAN DR", "20190101", "", "Z00000", "p9")) // no such practice
+      .toDF("GMP", "Practitioner_Name", "Started", "Ended", "ODS", "_id")
+    val organisations = Seq(
+      ("B86030", "THE SURGERY", "o1"), ("C55555", "OTHER SURGERY", "o2"))
+      .toDF("ODS", "Organisation_Name", "_id")
+    val storedRoles = Seq(
+      // ODS, GMP, _id, ResourceString
+      ("B86030", "G1", "31",
+        """{"resourceType":"PractitionerRole","active":true,"period":{"start":"2020-01-01"}}"""),
+      // same GMP at another practice: must not match G2 at B86030
+      ("C55555", "G2", "32",
+        """{"resourceType":"PractitionerRole","active":true}"""))
+      .toDF("ODS", "GMP", "_id", "ResourceString")
+    val merged = OdsImport.mergeRoles(practitioners, organisations, storedRoles)
+    val ids = merged.select("GMP", "_id_x", "_id_y", "_id")
+      .as[(String, String, String, String)].collect().sortBy(_._1).toSeq
+    assert(ids == Seq(("G1", "p1", "o1", "31"), ("G2", "p2", "o1", "")),
+      s"merged roles: $ids")
+    val plan = OdsImport.planRoles(merged)
+      .select("GMP", "action").as[(String, String)].collect().toMap
+    assert(plan == Map("G1" -> "noop", "G2" -> "insert"))
+  }
+
   test("A3/U4 duplicate practitioners returns all group members") {
     val rsrc = Seq(
       ("1", """{"identifier":[{"value":"G1"}]}"""),

@@ -7,8 +7,7 @@ import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 import graft.etl.OdsImport
@@ -122,8 +121,7 @@ class ZipCsvSpec extends SparkSpec {
     assert(a(5) == ((Some("C2"), Some("x,y"), None))) // no stray CR
   }
 
-  test("DSv2 zipcsv: column pruning reaches the reader (pruned read " +
-      "schema) and a limit pushes into the scan") {
+  test("DSv2 zipcsv: column pruning reaches the reader's positional split") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val dir = makeZipDir()
     val df = spark.read.format("zipcsv").schema(v2Schema).load(dir)
@@ -133,7 +131,6 @@ class ZipCsvSpec extends SparkSpec {
       .scan.asInstanceOf[ZipCsvScan]
     assert(scan.readSchema().fieldNames.toSeq == Seq("v"),
       s"expected pruned read schema, got ${scan.readSchema()}")
-    assert(scan.pushedLimit == 2, s"limit not pushed: ${scan.description()}")
     assert(df.as[String].collect().length == 2)
     // pruning is positional: reading only column k (position 0) must
     // never touch the malformed tail of a line — split stops at field 1
@@ -167,44 +164,17 @@ class ZipCsvSpec extends SparkSpec {
     assert(a(0)._2.isEmpty) // quoted empty -> NULL, both paths
   }
 
-  test("DSv2 zipcsv: filter pushdown prunes rows at the parser, stays " +
-      "residual, and matches the unpushed result (v1 == v2 == pushed-v2)") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+  test("DSv2 zipcsv: a missing schema or a non-string column fails at " +
+      "planning") {
     val dir = makeZipDir()
-    def scanOf(df: org.apache.spark.sql.DataFrame): ZipCsvScan =
-      df.queryExecution.executedPlan
-        .collect { case b: BatchScanExec => b }.head
-        .scan.asInstanceOf[ZipCsvScan]
-    // filter column (v) NOT in the projection: split must still reach it
-    val pushed = spark.read.format("zipcsv").schema(v2Schema).load(dir)
-      .filter(col("v") === "x" || col("v").isNull).select("k")
-    val sc = scanOf(pushed)
-    assert(sc.filters.nonEmpty,
-      s"no filters pushed: ${sc.description()}")
-    assert(sc.description().contains("PushedFilters"))
-    val got = pushed.as[String].collect().sorted.toSeq
-    val v1 = sparkCsv(dir, v2Schema)
-      .filter(col("v") === "x" || col("v").isNull)
-      .select("k").as[String].collect().sorted.toSeq
-    assert(got == v1 && got == Seq("A1", "A2"), s"pushed $got vs v1 $v1")
-    // equality + IN + startswith compose; null-field rows never match =
-    val f2 = spark.read.format("zipcsv").schema(v2Schema).load(dir)
-      .filter(col("k").isin("A1", "B1") && col("name").startsWith("N"))
-    assert(scanOf(f2).filters.length == 3) // isnotnull(name) + in + sw
-    assert(f2.select("k").as[String].collect().toSeq == Seq("A1"))
-    // unsupported (non-string typed compare) filters simply don't push
-    val f3 = spark.read.format("zipcsv").schema(v2Schema).load(dir)
-      .filter(length(col("k")) === 2)
-    assert(scanOf(f3).filters.forall(_.references.sameElements(Array("k"))))
-    assert(f3.count() == 4)
-  }
-
-  test("DSv2 zipcsv: schema inference sniffs the first member line " +
-      "(all-string positional c1..cN)") {
-    val dir = makeZipDir()
-    val inferred = spark.read.format("zipcsv").load(dir)
-    assert(inferred.schema.fieldNames.toSeq == Seq("c1", "c2", "c3"))
-    assert(inferred.count() == 4)
+    val noSchema = intercept[IllegalArgumentException](
+      spark.read.format("zipcsv").load(dir))
+    assert(noSchema.getMessage.contains("zipcsv"), noSchema.getMessage)
+    val intSchema = v2Schema.add(StructField("n", IntegerType))
+    val nonString = intercept[IllegalArgumentException](
+      ZipCsv.read(spark, dir, intSchema))
+    assert(nonString.getMessage.contains("zipcsv: column n is int"),
+      nonString.getMessage)
   }
 
   test("DSv2 zipcsv: ODS epraccur end to end through the positional " +

@@ -42,6 +42,13 @@ class WritebackSpec extends SparkSpec {
   private def compositions =
     Seq(("pat5", "enc5")).toDF("patientId", "encounterId")
 
+  /** A Task resource as the FHIR store holds it. */
+  private def storedTask(id: String, status: String, authored: String,
+      version: String, enc: String): String =
+    s"""{"resourceType":"Task","id":"$id","status":"$status",""" +
+      s""""authoredOn":"$authored","meta":{"versionId":"$version"},""" +
+      s""""focus":{"identifier":{"system":"sys","value":"$enc"}}}"""
+
   test("pollFilter: accepted + cutoff + runaway guard + newest-first top-k") {
     val polled = Writeback.pollFilter(tasks, "2025-07-01", count = 2)
       .select("id").as[String].collect()
@@ -108,33 +115,32 @@ class WritebackSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val srv = new StubFhirServer
     try {
+      srv.put("Task/t1",
+        storedTask("t1", "accepted", "2025-07-10T10:00:00", "3", "enc1"))
+      srv.put("Task/t4",
+        storedTask("t4", "accepted", "2025-07-10T13:00:00", "1", "enc-missing"))
       val ref = HttpStoreRef(srv.baseUrl, retries = 2, retryDelayMs = 1)
-      val stream =
-        MemoryStream[(String, String, String, String, String, String)]
-      stream.addData(
-        ("t1", "accepted", "3", "2025-07-10T10:00:00", "sys", "enc1"),
-        ("t4", "accepted", "1", "2025-07-10T13:00:00", "sys",
-          "enc-missing"))
-      val df = stream.toDF()
-        .toDF("id", "status", "versionId", "authoredOn", "focusSystem",
-          "focusValue")
-        .withColumn("note",
-          lit(null).cast("array<struct<time:string,text:string>>"))
-      // per-task wire order is GET (version re-read) then PUT, so the
-      // 2nd request of the batch is t1's status PUT — drop exactly it
-      srv.failNth(2, code = 503)
-      val q = Writeback.start(df, consultations, compositions,
+      // the tick's poll is request 1; per task the wire order is GET
+      // (version re-read) then PUT, so request 3 is t1's status PUT —
+      // drop exactly it
+      srv.failNth(3, code = 503)
+      val ticks = MemoryStream[Int]
+      val q = TaskPoller.start(spark, ref, cutoff = "2025-07-01", count = 5,
         // one partition + id order -> a deterministic wire sequence
-        sink = b => FhirSinks.writebackTasks(
-          b.repartition(1).sortWithinPartitions("id"), ref),
+        sink = polled => FhirSinks.writebackTasks(
+          Writeback.taskWriteback(
+            Writeback.classify(polled, consultations, compositions))
+            .repartition(1).sortWithinPartitions("id"),
+          ref),
         checkpoint = java.nio.file.Files
           .createTempDirectory("wb-ckpt-fail").toString,
-        interval = "1 seconds")
-      try q.processAllAvailable() finally q.stop()
-      // exact sequence: GET t1, PUT t1 (injected 503), PUT t1 (the X9
-      // retry), GET t4, PUT t4 — the mid-batch failure neither skips t1
-      // nor disturbs t4
+        interval = "1 seconds", ticks = Some(ticks.toDF()))
+      try { ticks.addData(1); q.processAllAvailable() } finally q.stop()
+      // exact sequence: the poll, GET t1, PUT t1 (injected 503), PUT t1
+      // (the X9 retry), GET t4, PUT t4 — the mid-batch failure neither
+      // skips t1 nor disturbs t4
       assert(srv.log.map(r => (r.method, r.path)) == Seq(
+        ("GET", "Task?status=accepted"),
         ("GET", "Task/t1"), ("PUT", "Task/t1"), ("PUT", "Task/t1"),
         ("GET", "Task/t4"), ("PUT", "Task/t4")),
         s"wire sequence was ${srv.log.map(r => (r.method, r.path))}")
@@ -156,19 +162,14 @@ class WritebackSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val srv = new StubFhirServer
     try {
-      def task(id: String, status: String, authored: String,
-          version: String, enc: String): String =
-        s"""{"resourceType":"Task","id":"$id","status":"$status",""" +
-          s""""authoredOn":"$authored","meta":{"versionId":"$version"},""" +
-          s""""focus":{"identifier":{"system":"sys","value":"$enc"}}}"""
       srv.put("Task/t1",
-        task("t1", "accepted", "2025-07-10T10:00:00", "3", "enc1"))
+        storedTask("t1", "accepted", "2025-07-10T10:00:00", "3", "enc1"))
       srv.put("Task/t2", // runaway guard: polled out, never touched
-        task("t2", "accepted", "2025-07-10T11:00:00", "250", "enc2"))
+        storedTask("t2", "accepted", "2025-07-10T11:00:00", "250", "enc2"))
       srv.put("Task/t4", // no consultation -> cancelled
-        task("t4", "accepted", "2025-07-10T13:00:00", "1", "enc-missing"))
+        storedTask("t4", "accepted", "2025-07-10T13:00:00", "1", "enc-missing"))
       srv.put("Task/t5", // EMIS duplicate -> completed, Diagnostics output
-        task("t5", "accepted", "2025-07-10T14:00:00", "2", "enc5"))
+        storedTask("t5", "accepted", "2025-07-10T14:00:00", "2", "enc5"))
       val ref = HttpStoreRef(srv.baseUrl, retries = 2, retryDelayMs = 1,
         requestTimeoutSec = 1)
       // the FIRST poll's search response hangs past the 1 s request
@@ -208,25 +209,5 @@ class WritebackSpec extends SparkSpec {
       assert(srv.contents("Task/t5").contains("duplicate consultation"))
       assert(srv.contents("Task/t2").contains("\"accepted\"")) // untouched
     } finally srv.stop()
-  }
-
-  test("streaming: 1-minute-poll pipeline via foreachBatch memory run") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(String, String, String, String, String, String)]
-    stream.addData(("t1", "accepted", "3", "2025-07-10T10:00:00", "sys", "enc1"))
-    val df = stream.toDF()
-      .toDF("id", "status", "versionId", "authoredOn", "focusSystem", "focusValue")
-      .withColumn("note", lit(null).cast("array<struct<time:string,text:string>>"))
-    var captured: Seq[String] = Nil
-    val q = Writeback.start(df, consultations, compositions,
-      sink = b => captured = b.select("id").as[String].collect().toSeq,
-      checkpoint = java.nio.file.Files
-        .createTempDirectory("wb-ckpt").toString,
-      interval = "1 seconds")
-    try {
-      q.processAllAvailable()
-      assert(captured == Seq("t1"))
-    } finally q.stop()
   }
 }
