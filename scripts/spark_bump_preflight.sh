@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Spark version-bump preflight.
 #
-# Three seams reach into PRIVATE Spark internals (`org.apache.spark.sql.
+# These seams reach into PRIVATE Spark internals (`org.apache.spark.sql.
 # classic`, package-private planner nodes) and are the first things a jar
 # upgrade breaks — re-prove them BEFORE trusting anything else on a new
 # Spark:
@@ -19,10 +19,13 @@
 #      implements the DSv2 read interfaces and column pruning
 #      (SupportsPushDownRequiredColumns) -> gated by graft.sources.ZipCsvSpec,
 #      which also pins its rows against Spark's own CSV reader.
+#   5. graft/operators/Bloom.scala constructs the internal
+#      BloomFilterAggregate and BloomFilterMightContain directly (q97,
+#      q143) -> gated by graft.operators.BloomSpec.
 #
-# All four fail LOUDLY on an incompatible Spark (cast/linkage errors or
+# All five fail LOUDLY on an incompatible Spark (cast/linkage errors or
 # assertion failures), never silently degrade. After these pass, run the
 # full `sbt test` + the Verify/check_oracle loop per CLAUDE.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
-exec sbt -batch "testOnly graft.core.CheckpointBridgeSpec graft.operators.TopKSpec graft.queries.PlanShapeSpec graft.sources.ZipCsvSpec"
+exec sbt -batch "testOnly graft.core.CheckpointBridgeSpec graft.operators.TopKSpec graft.queries.PlanShapeSpec graft.sources.ZipCsvSpec graft.operators.BloomSpec"

@@ -80,11 +80,12 @@ case class PqEncodeExpr(vec: Expression, codebook: Expression,
     java.lang.Double.compare(a, b) < 0
 
   /** Parsed codebook: per sub, arrays of (code_id, sv with null mask, c2).
-    * The broadcast hands every row in a partition the SAME ArrayData
-    * instance, so one reference-equality-memoized parse amortizes the
-    * nested getStruct/getArray wrapper allocations across the partition
-    * (re-parsing per row was ~2/3 of encode time at sf1). A different
-    * instance simply re-parses — correctness never depends on the memo.
+    * The broadcast hands every row in a partition the SAME codebook, so
+    * one memoized parse amortizes the nested getStruct/getArray wrapper
+    * allocations across the partition (re-parsing per row was ~2/3 of
+    * encode time at sf1). The memo is keyed on the codebook's CONTENT,
+    * not on the buffer it sits in: a reused row buffer (a cached frame's
+    * scan) holds a different codebook at the same address on every row.
     */
   private final class Parsed(cb: ArrayData) {
     val subs: Array[Array[(Long, Array[Double], Array[Boolean], Double)]] =
@@ -109,21 +110,15 @@ case class PqEncodeExpr(vec: Expression, codebook: Expression,
   }
 
   // ThreadLocal: the expression instance is shared by every task thread
-  // of the operator. Keyed on the UNDERLYING buffer identity, not the
-  // ArrayData wrapper — UnsafeArrayData wrappers are re-created per row
-  // while the broadcast bytes behind them are one shared array.
-  @transient private lazy val memo =
-    new ThreadLocal[(AnyRef, Long, Parsed)]
+  // of the operator. The key is a private copy of the parsed codebook, so
+  // a hit costs one byte-range compare (UnsafeArrayData.equals) and no
+  // allocation, and a caller overwriting its buffer cannot alias it.
+  @transient private lazy val memo = new ThreadLocal[(ArrayData, Parsed)]
 
   private def parsed(cb: ArrayData): Parsed = {
-    val (ko, koff) = cb match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
-        (u.getBaseObject, u.getBaseOffset)
-      case other => (other.asInstanceOf[AnyRef], 0L)
-    }
     val m0 = memo.get()
-    if (m0 != null && (m0._1 eq ko) && m0._2 == koff) m0._3
-    else { val p = new Parsed(cb); memo.set((ko, koff, p)); p }
+    if (m0 != null && m0._1 == cb) m0._2
+    else { val p = new Parsed(cb); memo.set((cb.copy(), p)); p }
   }
 
   def compute(v: ArrayData, cb: ArrayData): ArrayData = {

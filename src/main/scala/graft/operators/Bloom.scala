@@ -1,26 +1,27 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ExprBridge
 
 /** Bloom-filter semi-join prefilter — the 100 TB pattern for "probe a fact
   * table against a key set too large to broadcast as a hash relation but
   * whose *bit signature* fits in memory".
   *
-  * The build side's keys are folded into an m-bit bloom bitmap with a
-  * distributed explode→`bit_or` aggregation (one narrow shuffle over at
-  * most m/64 words); the bitmap — bounded at [[maxBits]]/64 longs, ~8 MB —
-  * is collected once and embedded as an array literal, so the probe side
-  * evaluates k codegen'd bit tests per row *before* its exchange. Rows that
-  * fail the bloom test can never join; rows that pass are re-checked by the
-  * exact semi-join, so the RESULT is byte-identical to the plain semi-join
-  * (which is exactly what the q97 oracle certifies) while the shuffle
-  * volume of the big side drops by the key set's selectivity.
-  *
-  * This mirrors what Spark's own runtime bloom-filter rewrite
-  * (`spark.sql.optimizer.runtime.bloomFilter.*`) injects, expressed as an
-  * explicit operator: deterministic sizing, no reliance on an optimizer
-  * heuristic firing, and a plan shape a test can gate.
+  * The filter is Spark's own: `BloomFilterAggregate` builds it over the
+  * key side inside a SCALAR SUBQUERY, and `BloomFilterMightContain` tests
+  * the fact side's keys with it BEFORE the fact side's exchange. Build,
+  * probe and exact join therefore plan and execute as ONE action, with no
+  * driver round trip between an index-build job and the probe job. Rows
+  * that fail the bloom test can never join; rows that pass are re-checked
+  * by the exact semi-join, so the RESULT is the plain semi-join's (which
+  * is exactly what the q97 oracle certifies) while the shuffle volume of
+  * the big side drops by the key set's selectivity. When the key side is
+  * past the broadcast threshold, Catalyst plans a sort-merge semi-join
+  * and the prefilter sits below the fact side's exchange (`BloomSpec`
+  * gates that placement).
   *
   * Reference anchor: the reference's ODS merge probes an import batch
   * against the national organization table (dags/ODSImport.py:140-155) —
@@ -28,222 +29,33 @@ import org.apache.spark.sql.functions._
   */
 object Bloom {
 
-  /** Hard cap on bitmap size: 2^26 bits = 1M longs = 8 MB on the driver
-    * and in the plan literal.
+  /** Hard cap on the filter size: 2^26 bits = 8 MB in the subquery result.
     */
-  val maxBits: Int = 1 << 26
+  private val maxBits: Int = 1 << 26
 
-  private def roundPow2(x: Long): Int = {
-    var m = 1024L
-    while (m < x && m < maxBits.toLong) m <<= 1
-    m.toInt
-  }
-
-  /** Double-hashing position family: pos_i = (h1 + i*h2) mod m with h1/h2
-    * from two xxhash64 seeds. Both operands are pre-reduced below m, so
-    * the products stay far below Long.MaxValue (ANSI mode: overflow
-    * throws).
-    *
-    * h1/h2 are the LOW BITS of the hashes (h2 forced odd — coprime to
-    * the power-of-two m, so the k probes cycle the whole bitmap). Low-bit
-    * masking makes the family FOLD-CLOSED: for any k ≤ K,
-    * pos_i(m=2^k) = pos_i(m=2^K) mod 2^k — which is what lets
-    * [[buildFolded]] build ONE max-size bitmap blind and shrink it to the
-    * measured key count afterwards, in the same job (a mod-(m−1) h2, the
-    * previous family, breaks the congruence).
+  /** ~10 bits per key: Spark derives its hash count from the bits per
+    * expected item, which gives a ~1% false-positive rate at this size.
     */
-  private def positions(numBits: Int, numHashes: Int,
-      h1: Column, h2: Column): Seq[Column] =
-    (0 until numHashes).map { i =>
-      pmod(h1 + lit(i.toLong) * h2, lit(numBits.toLong))
-    }
-
-  private def h1of(key: Column, numBits: Int): Column =
-    xxhash64(key).bitwiseAND(lit(numBits.toLong - 1))
-  private def h2of(key: Column, numBits: Int): Column =
-    xxhash64(key, lit(0x9E3779B97F4A7C15L))
-      .bitwiseAND(lit(numBits.toLong - 1)).bitwiseOR(lit(1L))
-
-  /** Distributed bloom build: explode each key's k bit positions, `bit_or`
-    * the per-word masks, collect the (word, mask) pairs into a dense
-    * Array[Long]. The collect is BOUNDED: at most numBits/64 ≤ 1M rows of
-    * two longs — this is a sketch, not the data.
-    */
-  def bitmapWords(keys: DataFrame, key: Column, numBits: Int,
-      numHashes: Int): Array[Long] = {
-    require(numBits > 0 && (numBits & (numBits - 1)) == 0 &&
-      numBits <= maxBits, s"numBits must be a power of two <= $maxBits")
-    val staged = keys.select(key.as("__k")).where(col("__k").isNotNull)
-      .select(h1of(col("__k"), numBits).as("__h1"),
-        h2of(col("__k"), numBits).as("__h2"))
-    val pos = staged.select(explode(array(
-      positions(numBits, numHashes, col("__h1"), col("__h2")): _*)).as("pos"))
-    val words = pos
-      .groupBy((col("pos") / 64).cast("long").as("w"))
-      .agg(bit_or(call_function("shiftleft", lit(1L),
-        pmod(col("pos"), lit(64L)).cast("int"))).as("mask"))
-      .collect()
-    val arr = new Array[Long](numBits / 64)
-    words.foreach(r => arr(r.getLong(0).toInt) |= r.getLong(1))
-    arr
-  }
-
-  /** Single-job sized build: the bitmap is built once at [[maxBits]] and
-    * FOLDED down to the size the key count warrants — removing the
-    * separate `count()` sizing job [[semiJoin]] used to pay before the
-    * build (three driver-sequential jobs → two: build, probe).
-    *
-    *  - Build at m = [[maxBits]]: the word aggregation's shuffle is
-    *    bounded by min(n·k, 1M) word rows either way, and the collect
-    *    stays ≤ 8 MB.
-    *  - The key count falls out of the SAME result: with S set bits of
-    *    m, the standard occupancy inversion n̂ = −(m/k)·ln(1 − S/m) is
-    *    exact in expectation (and ≈ S/k in the sparse regime every
-    *    non-saturated build is in).
-    *  - Fold to numBits = 2^b ≈ 10·n̂: because the position family is
-    *    fold-closed (see [[positions]]), OR-ing word j into j mod
-    *    (numBits/64) yields BIT-IDENTICAL output to a direct build at
-    *    numBits — `BloomSpec` asserts the equality, so the fold is not
-    *    an approximation trade.
-    */
-  /** Pure sizing decision for [[buildFolded]]: the power-of-two bit
-    * count a bitmap with `setBits` of [[maxBits]] set should fold to
-    * (== [[maxBits]] means "don't fold"). Factored out so the saturated
-    * edge is unit-testable without building a 2^26-bit filter: at
-    * setBits == maxBits the occupancy inversion n̂ = −(m/k)·ln(1 − S/m)
-    * is +Inf, and `ceil(+Inf).toLong · bitsPerKey` would wrap NEGATIVE
-    * in plain Scala (no ANSI here), silently folding to an all-ones
-    * 1024-bit filter that passes everything. The guard keeps the full
-    * bitmap instead — the probe stays correct either way (the exact
-    * semi-join follows), but sizing must degrade loudly towards "no
-    * fold", never towards "no filter".
-    */
-  private[operators] def foldTargetBits(setBits: Long, numHashes: Int,
-      bitsPerKey: Int): Int = {
-    val m = maxBits.toDouble
-    val nEst = -(m / numHashes) * math.log1p(-(setBits / m))
-    if (!nEst.isFinite ||
-      math.ceil(nEst) >= Long.MaxValue.toDouble / bitsPerKey) maxBits
-    else roundPow2(math.max(1024L, math.ceil(nEst).toLong * bitsPerKey))
-  }
-
-  def buildFolded(keys: DataFrame, key: Column,
-      numHashes: Int = 7, bitsPerKey: Int = 10): Array[Long] = {
-    val big = bitmapWords(keys, key, maxBits, numHashes)
-    val setBits = {
-      var s = 0L; var i = 0
-      while (i < big.length) { s += java.lang.Long.bitCount(big(i)); i += 1 }
-      s
-    }
-    if (setBits == 0L) return new Array[Long](1024 / 64) // empty key set
-    val numBits = foldTargetBits(setBits, numHashes, bitsPerKey)
-    if (numBits == maxBits) return big
-    val words = numBits / 64
-    val folded = new Array[Long](words)
-    var j = 0
-    while (j < big.length) { folded(j & (words - 1)) |= big(j); j += 1 }
-    folded
-  }
-
-  /** The k-bit membership test as one boolean column over the literal
-    * bitmap: k codegen'd element_at + mask conjunctions. NULL keys yield
-    * NULL (filtered out), matching semi-join semantics where NULL never
-    * matches.
-    *
-    * COMPOSED REFERENCE FORM — [[mightContainFused]] is the production
-    * path: at k=7 this form's predicate is ~40+ non-trivial expressions
-    * over a 100k-element array literal, past the JIT method-size cliff,
-    * and the probe stage silently ran interpreted (7.7 s for 6 M rows at
-    * sf1 — 4.6× the plain semi-join it prefilters). Kept as the
-    * property-test oracle in `BloomSpec`.
-    */
-  def mightContain(key: Column, bitmap: Array[Long],
-      numHashes: Int): Column = {
-    val numBits = bitmap.length * 64
-    val litMap = typedLit(bitmap)
-    val h1 = h1of(key, numBits)
-    val h2 = h2of(key, numBits)
-    positions(numBits, numHashes, h1, h2).map { pos =>
-      element_at(litMap, ((pos / 64) + 1).cast("int"))
-        .bitwiseAND(call_function("shiftleft", lit(1L),
-          pmod(pos, lit(64L)).cast("int"))) =!= lit(0L)
-    }.reduce(_ && _)
-  }
-
-  /** The production probe: same double-hash position family, but the k
-    * bit tests run in ONE loop-based codegen'd expression
-    * ([[graft.functions.BloomTestExpr]]) over a plain JVM `long[]`
-    * reference — the generated method stays tiny regardless of k and the
-    * stage stays inside WholeStageCodegen (the q41 JIT-cliff rule).
-    */
-  def mightContainFused(key: Column, bitmap: Array[Long],
-      numHashes: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ExprBridge
-    val numBits = bitmap.length * 64
-    ExprBridge.column(graft.functions.BloomTestExpr(
-      ExprBridge.expr(h1of(key, numBits)),
-      ExprBridge.expr(h2of(key, numBits)),
-      bitmap, numHashes))
-  }
+  private val bitsPerKey = 10
 
   /** Exact semi-join with a bloom prefilter on the big side: identical
-    * result to `big.join(small, bigKey === smallKey, "left_semi")`, but the
-    * big side is filtered BEFORE the join — when the key set is past the
-    * broadcast threshold (the 100 TB case: Catalyst picks sort-merge),
-    * the prefilter sits below the fact side's exchange and cuts its
-    * shuffle volume by the key set's selectivity. At test SF the exact
-    * join legitimately broadcasts (AQE sees a small build side); pass
-    * `forceShuffle = true` to pin the sort-merge plan — `BloomSpec` gates
-    * the filter-below-exchange ordering on that variant.
+    * result to `big.join(small, bigKey === smallKey, "left_semi")`. The
+    * subquery runs once per action (SubqueryExec) and its sketch flows to
+    * the filter as a scalar.
     *
-    * Driver-sequential work is TWO jobs: the [[buildFolded]] index build
-    * (sizing rides the build — ~10 bits/key, k=7 → ~0.8% false-positive
-    * rate) and the probe+join itself. In production the build is an
-    * index amortized across every probe of the same key set; the bench
-    * number charges it to the single query.
-    */
-  def semiJoin(big: DataFrame, small: DataFrame, bigKey: String,
-      smallKey: String, numHashes: Int = 7,
-      forceShuffle: Boolean = false): DataFrame = {
-    val bitmap = buildFolded(small, col(smallKey), numHashes)
-    val rhs = if (forceShuffle) small.hint("merge") else small
-    big.where(mightContainFused(col(bigKey), bitmap, numHashes))
-      .join(rhs, col(bigKey) === col(smallKey), "left_semi")
-  }
-
-  /** ONE-ACTION form of [[semiJoin]]: the bloom is built by Spark's own
-    * `BloomFilterAggregate` inside a SCALAR SUBQUERY on the probe
-    * filter, so build + probe + exact join plan and execute as a single
-    * action — no driver round trip between an index-build job and the
-    * probe job ([[semiJoin]]'s two driver-sequential jobs were 19× the
-    * DuckDB latency at sf1 for a result the bloom cannot change). The
-    * subquery executes once per action (SubqueryExec), its ~`numBits`-bit
-    * sketch flows to the filter as a literal-like scalar, and the exact
-    * `left_semi` still kills false positives, so the RESULT stays the
-    * plain semi-join's — what the q97 oracle certifies.
-    *
-    * [[semiJoin]] (the explicit [[buildFolded]] index) remains the
-    * amortized path: a persistent key-set index probed by MANY queries
-    * is built once there, while this form rebuilds per action.
-    *
-    * Sizing is static — `estKeys` keys at ~`bitsPerKey` bits each,
+    * Sizing is static — `estKeys` keys at [[bitsPerKey]] bits each,
     * capped at [[maxBits]] — because a sizing job would reintroduce the
-    * round trip this form exists to delete; an undersized estimate only
+    * round trip this form exists to avoid; an undersized estimate only
     * raises the false-positive rate (more exact-join work), never
     * correctness.
     */
-  def semiJoinInline(big: DataFrame, small: DataFrame, bigKey: String,
-      smallKey: String, estKeys: Long = 1L << 20,
-      bitsPerKey: Int = 10): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.ExprBridge
+  def semiJoin(big: DataFrame, small: DataFrame, bigKey: String,
+      smallKey: String, estKeys: Long = 1L << 20): DataFrame = {
     val numBits = math.min(maxBits.toLong, estKeys * bitsPerKey)
     val bf = small
       .agg(ExprBridge.column(new BloomFilterAggregate(
           ExprBridge.expr(xxhash64(col(smallKey))),
-          org.apache.spark.sql.catalyst.expressions.Literal(estKeys),
-          org.apache.spark.sql.catalyst.expressions.Literal(numBits))
+          Literal(estKeys), Literal(numBits))
         .toAggregateExpression()).as("bf"))
       .scalar()
     val test = ExprBridge.column(BloomFilterMightContain(

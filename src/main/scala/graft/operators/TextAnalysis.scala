@@ -106,7 +106,7 @@ object TextAnalysis {
     * driver ceiling at any benchmark size. Over either budget, the
     * scale tier explodes corpus grams through a bloom prefilter built
     * by `BloomFilterAggregate` in a scalar subquery on the probe filter
-    * ([[Bloom.semiJoinInline]]) and verifies survivors with the exact
+    * ([[Bloom.semiJoin]]) and verifies survivors with the exact
     * semi-join — the sketch is the only benchmark-sized thing in the
     * plan, and the corpus side still never shuffles before the
     * prefilter kills its non-matching grams.
@@ -140,7 +140,7 @@ object TextAnalysis {
           coalesce(stopwordHits(col("grams"), collected.toSeq), lit(0L))
             .as("n_contaminated"))
       } else {
-        val hits = Bloom.semiJoinInline(
+        val hits = Bloom.semiJoin(
             staged.select(col("doc_id"), explode(col("grams")).as("gram")),
             benchGrams.withColumnRenamed("gram", "bgram"),
             "gram", "bgram", estKeys = gramCount)

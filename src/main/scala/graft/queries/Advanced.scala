@@ -406,7 +406,7 @@ object Advanced {
   //     are scanned ONCE (the 3-type IN filter + ts guard reach the
   //     parquet scan — gated on [[funnelPrep]]) and shuffled on user_id
   //     ONCE, then CHECKPOINTED WITH ITS PARTITIONING
-  //     (CheckpointBridge.checkpointHashPartitioned): without a barrier
+  //     (CheckpointBridge.checkpointPartitioned): without a barrier
   //     Catalyst pushes each stage's event_type filter back below the
   //     repartition and the plan degenerates to three per-type
   //     exchanges (measured — the r7 shape); a cache() barrier doesn't
@@ -432,7 +432,7 @@ object Advanced {
   private val q122_funnel = Q(
     run = (s, d) => {
       val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .checkpointHashPartitioned(funnelPrep(s, d))
+        .checkpointPartitioned(funnelPrep(s, d))
       val v = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min(col("ts")).as("t_view"))
       val c = e.filter(col("event_type") === "click")
@@ -476,7 +476,7 @@ object Advanced {
   private val q123_retention = Q(
     run = (s, d) => {
       val e = org.apache.spark.sql.graftbridge.CheckpointBridge
-        .checkpointHashPartitioned(
+        .checkpointPartitioned(
           Tables.events(s, d).filter(col("ts").isNotNull)
             .select(col("user_id"), to_date(col("ts")).as("d"))
             .repartition(

@@ -639,8 +639,8 @@ object Extended {
   //     bloom is built by a scalar-subquery aggregate over the (selective)
   //     orders key set and applied to lineitem BEFORE its exchange — ONE
   //     action, no driver round trip between an index-build job and the
-  //     probe (the two-job Bloom.semiJoin form was 19× the DuckDB latency
-  //     at sf1; that form stays as the amortized persistent-index path).
+  //     probe (an earlier two-job form, a collected bitmap then the
+  //     probe, was 19× the DuckDB latency at sf1).
   //     The exact semi-join then kills bloom false positives, so the
   //     result — which is what the oracle checks — is the plain
   //     semi-join's, while the shuffled volume shrinks by the key set's
@@ -650,7 +650,7 @@ object Extended {
       val hot = Tables.orders(s, d)
         .where(col("o_totalprice") > 480000.0)
         .select(col("o_orderkey"))
-      graft.operators.Bloom.semiJoinInline(Tables.lineitem(s, d), hot,
+      graft.operators.Bloom.semiJoin(Tables.lineitem(s, d), hot,
           "l_orderkey", "o_orderkey")
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),

@@ -115,11 +115,4 @@ object CheckpointBridge {
         spark, originStats = stats)
     Dataset.ofRows(spark, plan)
   }
-
-  /** Former name, kept for call-site readability where the plan ends in
-    * an explicit-count hash repartition.
-    */
-  def checkpointHashPartitioned(
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    checkpointPartitioned(df)
 }

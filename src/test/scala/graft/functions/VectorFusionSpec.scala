@@ -133,4 +133,29 @@ class VectorFusionSpec extends SparkSpec {
     }
     withConf(modes(1)._2: _*)(score(Seq(2L, 0L))) // in range: no throw
   }
+
+  test("pq_encode reads each row's own codebook when the scan reuses " +
+      "its row buffer (a cached frame)") {
+    import org.apache.spark.sql.graftbridge.ExprBridge
+    // one subspace, two codes; odd ids swap which code_id owns (1, 0),
+    // so the code nearest to the vector (1, 0) alternates 0, 1, 0, 1, …
+    def code(id: org.apache.spark.sql.Column, x: Double, y: Double) =
+      struct(id.as("code_id"), array(lit(x), lit(y)).as("sv"),
+        lit(1.0).as("c2"))
+    val df = spark.range(8).select(col("id"),
+      array(lit(1.0), lit(0.0)).as("v"),
+      array(struct(lit(0L).as("sub_id"), array(
+        code(col("id") % 2, 1.0, 0.0),
+        code(lit(1L) - col("id") % 2, 0.0, 1.0)).as("codes"))).as("cb"))
+    def encode(in: org.apache.spark.sql.DataFrame): Seq[Long] =
+      in.select(col("id"), ExprBridge.column(PqEncodeExpr(
+          ExprBridge.expr(col("v")), ExprBridge.expr(col("cb")), 1, 6))
+          .as("codes"))
+        .orderBy("id").collect().map(_.getSeq[Long](1).head).toSeq
+    val want = Seq(0L, 1L, 0L, 1L, 0L, 1L, 0L, 1L)
+    assert(encode(df) == want)
+    val cached = df.cache()
+    try assert(encode(cached) == want)
+    finally cached.unpersist(blocking = true)
+  }
 }

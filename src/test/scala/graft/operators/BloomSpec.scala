@@ -7,102 +7,37 @@ import graft.SparkSpec
 class BloomSpec extends SparkSpec {
   import spark.implicits._
 
-  test("no false negatives: every inserted key passes mightContain") {
-    val keys = (1L to 2000L).map(_ * 7919L).toDF("k")
-    val bitmap = Bloom.bitmapWords(keys, col("k"), numBits = 1 << 15,
-      numHashes = 7)
-    val misses = keys
-      .where(!Bloom.mightContain(col("k"), bitmap, numHashes = 7))
-      .count()
-    assert(misses === 0L)
-  }
-
-  test("false-positive rate stays near the sized target") {
-    val keys = (1L to 2000L).toDF("k")
-    // ~16 bits/key at m=2^15 → fpp well under 1%
-    val bitmap = Bloom.bitmapWords(keys, col("k"), numBits = 1 << 15,
-      numHashes = 7)
-    val probes = (1_000_001L to 1_020_000L).toDF("k")
-    val fp = probes
-      .where(Bloom.mightContain(col("k"), bitmap, numHashes = 7))
-      .count()
-    assert(fp < 400L, s"false-positive count $fp out of 20000 probes")
-  }
-
-  test("semiJoin result identical to the plain semi-join (string keys, " +
-      "nulls never match)") {
+  test("semiJoin == plain semi-join (nulls, dup fact rows, empty " +
+      "key set) and the bloom builds as a scalar subquery, not a " +
+      "separate driver job") {
     val big = Seq(
       ("a", 1), ("b", 2), ("c", 3), ("d", 4), (null, 5), ("e", 6),
       ("a", 7), ("zz", 8)).toDF("k", "v")
     val small = Seq("a", "c", "e", "nope").toDF("sk")
-      .union(Seq.empty[String].toDF("sk"))
     val got = Bloom.semiJoin(big, small, "k", "sk")
       .orderBy("v").collect().map(r => (r.getString(0), r.getInt(1)))
-    val want = big.join(small, col("k") === col("sk"), "left_semi")
+    val expect = big.join(small, col("k") === col("sk"), "left_semi")
       .orderBy("v").collect().map(r => (r.getString(0), r.getInt(1)))
-    assert(got.toSeq === want.toSeq)
-    assert(got.toSeq === Seq(("a", 1), ("c", 3), ("e", 6), ("a", 7)))
+    assert(got.toSeq == expect.toSeq)
+    // empty key set: no rows survive, no crash
+    val none = Bloom.semiJoin(big,
+      small.where(col("sk") === "absent"), "k", "sk").count()
+    assert(none == 0L)
+    // plan shape: the might_contain filter references a scalar subquery
+    // (ONE action: build rides the probe's execution, no driver
+    // round-trip between an index job and the probe job)
+    val q = Bloom.semiJoin(big, small, "k", "sk")
+    val planStr = q.queryExecution.executedPlan.toString
+    assert(planStr.contains("might_contain") ||
+      planStr.contains("BloomFilterMightContain"),
+      s"expected a bloom membership test in the plan:\n$planStr")
+    assert(planStr.contains("scalar-subquery") ||
+      planStr.contains("Subquery"),
+      s"expected the bloom build as a subquery:\n$planStr")
   }
 
-  test("bitmap build is distributed and bounded: word count <= numBits/64") {
-    val keys = (1L to 500L).toDF("k")
-    val bitmap = Bloom.bitmapWords(keys, col("k"), numBits = 4096,
-      numHashes = 5)
-    assert(bitmap.length === 4096 / 64)
-    assert(bitmap.exists(_ != 0L))
-  }
-
-  test("buildFolded == direct build at the derived size (the fold is " +
-      "bit-identical, not an approximation) and sizes to the key count") {
-    for (n <- Seq(100L, 2000L, 50000L)) {
-      val keys = (1L to n).map(_ * 7919L).toDF("k")
-      val folded = Bloom.buildFolded(keys, col("k"), numHashes = 7)
-      // sized ~10 bits/key, rounded to a power of two (>= the 1024 floor)
-      val numBits = folded.length * 64
-      assert(numBits >= 1024 && (numBits & (numBits - 1)) == 0)
-      assert(numBits >= n * 5 && numBits <= math.max(1024L, n * 40L),
-        s"n=$n sized numBits=$numBits")
-      val direct = Bloom.bitmapWords(keys, col("k"), numBits, numHashes = 7)
-      assert(java.util.Arrays.equals(folded, direct), s"fold mismatch n=$n")
-    }
-    // empty key set: all-zero bitmap (prefilter rejects everything)
-    val empty = Bloom.buildFolded(Seq.empty[Long].toDF("k"), col("k"))
-    assert(empty.forall(_ == 0L))
-  }
-
-  test("foldTargetBits: saturated / near-saturated bitmaps refuse to " +
-      "fold (never wrap to an all-ones 1024-bit pass-everything filter)") {
-    // full saturation: occupancy inversion is +Inf -> keep full size
-    assert(Bloom.foldTargetBits(Bloom.maxBits.toLong, 7, 10) ==
-      Bloom.maxBits)
-    // one bit shy of saturation: huge-but-finite estimate -> still no
-    // fold below the honest size (monotone, and never negative/tiny)
-    assert(Bloom.foldTargetBits(Bloom.maxBits.toLong - 1, 7, 10) ==
-      Bloom.maxBits)
-    // sparse regime: ~n*k bits set sizes to ~10 bits/key as before
-    val sized = Bloom.foldTargetBits(2000L * 7, 7, 10)
-    assert(sized >= 1024 && sized < Bloom.maxBits &&
-      (sized & (sized - 1)) == 0)
-  }
-
-  test("fused bloom_test == composed mightContain on hits, misses and " +
-      "null keys") {
-    val keys = (1L to 3000L).map(_ * 104729L).toDF("k")
-    val bitmap = Bloom.bitmapWords(keys, col("k"), numBits = 1 << 15,
-      numHashes = 7)
-    val probes = ((1L to 3000L).map(_ * 104729L) ++ (1L to 20000L))
-      .map(Option(_)).:+(Option.empty[Long]).toDF("k")
-    val disagree = probes
-      .select(col("k"),
-        Bloom.mightContain(col("k"), bitmap, 7).as("composed"),
-        Bloom.mightContainFused(col("k"), bitmap, 7).as("fused"))
-      .where(!(col("composed") <=> col("fused")))
-      .count()
-    assert(disagree === 0L)
-  }
-
-  test("forceShuffle plan shape: the bloom prefilter sits BELOW the fact " +
-      "side's exchange (sort-merge semi-join sees pre-filtered input)") {
+  test("sort-merge plan shape: the bloom prefilter sits BELOW the fact " +
+      "side's exchange (the semi-join sees pre-filtered input)") {
     // range sources, not local relations — Catalyst eagerly evaluates a
     // Filter over a LocalRelation and the prefilter would vanish from
     // the plan under test
@@ -110,16 +45,20 @@ class BloomSpec extends SparkSpec {
     val small = spark.range(1, 5001, 7).select(col("id").as("sk"))
     // walk the physical tree, not string offsets: an indexOf over the
     // explain text keys on print order, and a plan change that prints the
-    // build side's exchange first would let the gate pass vacuously
+    // build side's exchange first would let the gate pass vacuously.
     // executedPlan carries EnsureRequirements' exchanges (sparkPlan is
     // pre-preparation and has none); unwrap AQE to its initial plan —
-    // the shape Catalyst chose, which is what carries to a cluster
-    val plan = Bloom.semiJoin(big, small, "k", "sk", forceShuffle = true)
-      .queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive
-            .AdaptiveSparkPlanExec => a.initialPlan
-        case p => p
-      }
+    // the shape Catalyst chose, which is what carries to a cluster.
+    // Broadcast joins off: the key side is "too large to broadcast", the
+    // 100 TB case, so Catalyst must plan a sort-merge semi-join
+    val plan = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      Bloom.semiJoin(big, small, "k", "sk")
+        .queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive
+              .AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+    }
     val smj = plan.collectFirst {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }
@@ -132,37 +71,9 @@ class BloomSpec extends SparkSpec {
     }
     assert(factExch.isDefined, s"expected the fact-side exchange:\n$plan")
     val bloomBelow = factExch.get.child.find(n => n.expressions.exists(
-      _.find(_.isInstanceOf[graft.functions.BloomTestExpr]).isDefined))
+      _.find(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions
+        .BloomFilterMightContain]).isDefined))
     assert(bloomBelow.isDefined,
       s"bloom filter must sit below the fact exchange (prefilter):\n$plan")
-  }
-
-  test("semiJoinInline == plain semi-join (nulls, dup fact rows, empty " +
-      "key set) and the bloom builds as a scalar subquery, not a " +
-      "separate driver job") {
-    val big = Seq(
-      ("a", 1), ("b", 2), ("c", 3), ("d", 4), (null, 5), ("e", 6),
-      ("a", 7), ("zz", 8)).toDF("k", "v")
-    val small = Seq("a", "c", "e", "nope").toDF("sk")
-    val got = Bloom.semiJoinInline(big, small, "k", "sk")
-      .orderBy("v").collect().map(r => (r.getString(0), r.getInt(1)))
-    val expect = big.join(small, col("k") === col("sk"), "left_semi")
-      .orderBy("v").collect().map(r => (r.getString(0), r.getInt(1)))
-    assert(got.toSeq == expect.toSeq)
-    // empty key set: no rows survive, no crash
-    val none = Bloom.semiJoinInline(big,
-      small.where(col("sk") === "absent"), "k", "sk").count()
-    assert(none == 0L)
-    // plan shape: the might_contain filter references a scalar subquery
-    // (ONE action: build rides the probe's execution, no driver
-    // round-trip between an index job and the probe job)
-    val q = Bloom.semiJoinInline(big, small, "k", "sk")
-    val planStr = q.queryExecution.executedPlan.toString
-    assert(planStr.contains("might_contain") ||
-      planStr.contains("BloomFilterMightContain"),
-      s"expected a bloom membership test in the plan:\n$planStr")
-    assert(planStr.contains("scalar-subquery") ||
-      planStr.contains("Subquery"),
-      s"expected the bloom build as a subquery:\n$planStr")
   }
 }

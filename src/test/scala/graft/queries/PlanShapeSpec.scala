@@ -298,7 +298,7 @@ class PlanShapeSpec extends SparkSpec {
       s"expected the subquery bloom build:\n$p")
     assert(!p.contains("CartesianProduct"), s"no cartesian products:\n$p")
     // the filter-below-exchange ordering of the 100 TB (sort-merge) plan
-    // is gated in BloomSpec on a forceShuffle = true variant
+    // is gated in BloomSpec with broadcast joins turned off
   }
 
   test("q98_ivfpq_search: corpus path is a pure map — probed-cell semi " +
